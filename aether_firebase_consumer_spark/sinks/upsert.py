@@ -1,4 +1,4 @@
-"""Batched upsert sink (reference O12) + hash state table (O10).
+"""Batched upsert sink (reference O12) + hash change gate (O10).
 
 The reference accumulates Firestore ``batch.set(ref, doc)`` calls keyed
 by ``doc['id']`` — set = full-document upsert — committing every 50 docs
@@ -27,6 +27,7 @@ is a drop-in upgrade of this class.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import functools
 import json
@@ -91,22 +92,37 @@ def hive_partition_value(v) -> str:
     return str(v)
 
 
-def _anti_by_keys(left: DataFrame, keys_df: DataFrame,
-                  key_cols: list[str]) -> DataFrame:
-    """NULL-SAFE ``left ANTI JOIN keys_df ON key_cols``: the
-    name-list join form uses null-unsafe equality, under which a
-    null-keyed row in ``left`` never matches a null key in the batch
-    — a MERGE would then keep the old row alongside the new one
-    (silent duplicate) and a DELETE would never delete it. Null keys
-    are pathological for a document table but perfectly legal for a
-    GROUP BY view maintained through this table (SQL groups nulls),
-    so key matching is ``<=>`` throughout."""
+def _key_join(left: DataFrame, keys_df: DataFrame, key_cols: list[str],
+              how: str) -> DataFrame:
+    """NULL-SAFE ``left ANTI|SEMI JOIN keys_df ON key_cols`` (``how`` is
+    ``"left_anti"`` or ``"left_semi"``): the name-list join form uses
+    null-unsafe equality, under which a null-keyed row in ``left``
+    never matches a null key in the batch — a MERGE would then keep
+    the old row alongside the new one (silent duplicate) and a DELETE
+    would never delete it. Null keys are pathological for a document
+    table but perfectly legal for a GROUP BY view maintained through
+    this table (SQL groups nulls), so key matching is ``<=>``
+    throughout."""
     l, r = left.alias("l"), keys_df.select(*key_cols).alias("r")
     cond = None
     for k in key_cols:
         e = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
         cond = e if cond is None else cond & e
-    return l.join(r, cond, "left_anti")
+    return l.join(r, cond, how)
+
+
+@contextlib.contextmanager
+def _evaluated_once(df: DataFrame):
+    """``df`` computed once and pinned for the block, then released.
+    A local checkpoint, not ``persist``: it runs under adaptive
+    execution, so joins and writes over it coalesce like an uncached
+    plan (a persisted key-deduplicated frame pins them to its key
+    partitioning: about three times the files)."""
+    pinned = df.localCheckpoint()
+    try:
+        yield pinned
+    finally:  # a checkpoint has no DataFrame-level release
+        pinned._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def _touched_filter(pc: str, touched: list) -> Column:
@@ -448,12 +464,12 @@ class ParquetUpsertTable:
     # pattern), invisible to data readers (underscore prefix), GC'd
     # with its version. changes(v) reads the recording when present and
     # falls back to the diff for versions without one (pre-r11 history,
-    # import_snapshot). Determinism: recordings are derived by reading
-    # BACK the staged files (never by re-evaluating the caller's batch
-    # plan, which may be non-deterministic between the data write and a
-    # second evaluation), diffed against the parent's touched
-    # partitions only — hardlink-carried partitions are inode-identical
-    # and provably contribute no changes.
+    # import_snapshot). Each op records from the frame it wrote: merge
+    # and replace evaluate their batch once, so the write and the
+    # recording see the same survivor per key. A merge cannot delete,
+    # so its diff is confined to the batch's keys; the other ops diff
+    # their rewritten scope only — hardlink-carried partitions are
+    # inode-identical and provably contribute no changes.
     _CHANGES_DIR = "_changes"
 
     @staticmethod
@@ -481,10 +497,10 @@ class ParquetUpsertTable:
 
     def _repair_void(self, df: DataFrame, hints: dict) -> DataFrame:
         """Cast VOID (NullType) columns to a concrete type before
-        RECORDING them. VOID leaks in exactly one way: a staged
-        partition directory whose every value is null reads back with
-        the partition column type-INFERRED from the directory names —
-        all ``__HIVE_DEFAULT_PARTITION__`` → NullType. A recording
+        RECORDING them. VOID leaks in exactly one way: a version whose
+        every partition value is null reads back with the partition
+        column type-INFERRED from the directory names — all
+        ``__HIVE_DEFAULT_PARTITION__`` → NullType. A recording
         written with a VOID column poisons every later mergeSchema
         read of the feed (VOID and STRING cannot merge). The repair
         takes the true type from the caller's batch / the parent
@@ -548,39 +564,26 @@ class ParquetUpsertTable:
             .where(F.col("change_type").isNotNull())
             .select(*self.key_cols, "change_type"))
 
-    @staticmethod
-    def _staged_has_data(staged: str) -> bool:
-        for root, dirs, names in os.walk(staged):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(n.endswith(".parquet") for n in names):
-                return True
-        return False
-
     def _record_changes(self, staged: str, old: DataFrame | None,
-                        batch: DataFrame | None = None) -> None:
-        """Record the staged write's delta vs ``old`` (the parent rows
-        of the REWRITTEN scope only — for a partition-pruned write,
-        the touched partitions; carried hardlinks are unchanged by
-        construction). Reads the staged files back, so the recording
-        reflects exactly what was written. A rewrite that emptied its
-        whole scope leaves no staged files yet (hardlinks land after
-        recording) — the new side is then empty by definition.
-        ``batch`` (the caller's input frame) supplies authoritative
-        column types for the VOID repair (see :meth:`_repair_void`)
-        — the staged read-back loses the partition column's type when
-        every value in it is null."""
-        if self._staged_has_data(staged):
-            new = (self.spark.read.option("mergeSchema", "true")
-                   .parquet(staged))
-        else:
-            new = old.limit(0)
+                        new: DataFrame) -> None:
+        """Record a write's delta as ``_changes/`` in its staged dir:
+        ``new`` is the frame the op wrote into the rewritten scope and
+        ``old`` the parent's rows of that scope (None at table
+        creation). ``new`` supplies authoritative column types for the
+        VOID repair (see :meth:`_repair_void`)."""
+        pc = self.partition_col
+        if (old is not None and pc in old.columns and pc in new.columns
+                and new.schema[pc].dataType.typeName() != "void"):
+            # the parent's partition column is typed by inference from
+            # its directory names; diff it in the type the op wrote
+            old = old.withColumn(pc, F.col(pc).cast(new.schema[pc].dataType))
         diff = self._diff_frames(old, new)
         if self.record_change_values:
             diff = self._attach_values(diff, new)
         if self.record_change_preimages:
             diff = self._attach_preimages(diff, old)
         self._write_changes(staged, diff,
-                            hints=self._type_hints(batch, old))
+                            hints=self._type_hints(new, old))
 
     def _attach_values(self, diff: DataFrame,
                        new: DataFrame) -> DataFrame:
@@ -667,7 +670,6 @@ class ParquetUpsertTable:
                 .filter(untouched))
 
     # -- merge ----------------------------------------------------------
-    @_retrying
     def merge(self, batch: DataFrame,
               commit_meta: "dict | Callable | None" = None) -> None:
         """Upsert ``batch`` by key: one row per key (dropDuplicates on
@@ -684,34 +686,49 @@ class ParquetUpsertTable:
         new version directory before the pointer swap, so it becomes
         visible atomically with the data — the Delta-style commit tag
         that lets foreachBatch sinks fence replayed epochs (see
-        ``IncrementalRollup``)."""
-        batch1 = batch.dropDuplicates(self.key_cols)
+        ``IncrementalRollup``).
+
+        The batch is evaluated ONCE (:func:`_evaluated_once`), so the
+        write, the change recording and every commit retry see the same
+        survivor per key, and the source behind it is read once."""
+        with _evaluated_once(batch.dropDuplicates(self.key_cols)) as batch1:
+            # an empty merge is a NO-OP whether or not the table exists:
+            # onto an existing table the rewrite would copy EVERYTHING
+            # for nothing, and onto a fresh table Spark would write a
+            # version with no parquet files at all (only _SUCCESS),
+            # bricking every later read with 'Unable to infer schema'
+            if batch1.count():
+                self._merge(batch1, commit_meta)
+
+    def _record_merge(self, staged: str, scope: DataFrame,
+                      batch1: DataFrame) -> None:
+        """Record a merge from the batch it wrote. A merge cannot
+        delete, so the diff is confined to the batch's keys: ``new`` is
+        the batch in the written schema (parent-only columns null),
+        ``old`` the rows of ``scope`` holding those keys."""
+        new = scope.limit(0).unionByName(batch1, allowMissingColumns=True)
+        old = _key_join(scope, batch1, self.key_cols, "left_semi")
+        self._record_changes(staged, old, new)
+
+    @_retrying
+    def _merge(self, batch1: DataFrame,
+               commit_meta: "dict | Callable | None") -> None:
         parent = self.current_version()
         current = self._read_at(parent)
-        # an empty merge is a NO-OP whether or not the table exists:
-        # onto an existing table the rewrite would copy EVERYTHING for
-        # nothing, and onto a fresh table Spark would write a version
-        # with no parquet files at all (only _SUCCESS), bricking every
-        # later read with 'Unable to infer schema'
-        if batch1.isEmpty():
-            return
         target = self._stage_dir()
         if current is None:
             writer = batch1.write.mode("overwrite")
             if self.partition_col:
                 writer = writer.partitionBy(self.partition_col)
             writer.parquet(target)
-            self._record_changes(target, None, batch=batch1)
+            self._record_changes(target, None, batch1)
             self._publish(target, parent, commit_meta)
             return
         if not self.partition_col:
-            keep = _anti_by_keys(current, batch1, self.key_cols)
+            keep = _key_join(current, batch1, self.key_cols, "left_anti")
             keep.unionByName(batch1, allowMissingColumns=True) \
                 .write.mode("overwrite").parquet(target)
-            # an unpartitioned merge rewrites the whole table, so its
-            # recording diffs full old vs full new — same cost shape
-            # as the merge itself
-            self._record_changes(target, current, batch=batch1)
+            self._record_merge(target, current, batch1)
             self._publish(target, parent, commit_meta)
             return
         pc = self.partition_col
@@ -739,23 +756,20 @@ class ParquetUpsertTable:
                 if hive_partition_value(r[0]) not in seen:
                     touched.append(r[0])
                     seen.add(hive_partition_value(r[0]))
-        keep = _anti_by_keys(current.filter(_touched_filter(pc, touched)),
-                             batch1, self.key_cols)
+        keep = _key_join(current.filter(_touched_filter(pc, touched)),
+                         batch1, self.key_cols, "left_anti")
         # allowMissingColumns: document streams evolve (O14); a batch
         # adding or dropping a column merges with nulls on either side —
         # full-document set semantics, like the reference's batch.set
         (keep.unionByName(batch1, allowMissingColumns=True)
          .write.mode("overwrite").partitionBy(pc).parquet(target))
-        # record BEFORE linking: at this point the staged dir holds
-        # exactly the rewritten (touched) partitions, and every
-        # current row whose key is in the batch lives in a touched
-        # partition (the moved-key extension above guarantees it), so
-        # diffing touched-old vs staged IS the full version diff —
+        # every current row whose key is in the batch lives in a
+        # touched partition (the moved-key extension above guarantees
+        # it), so the touched scope holds the whole pre-image side;
         # untouched partitions are carried as hardlinks, provably
-        # unchanged. Cost ∝ batch, not table.
-        self._record_changes(
-            target, current.filter(_touched_filter(pc, touched)),
-            batch=batch1)
+        # unchanged
+        self._record_merge(
+            target, current.filter(_touched_filter(pc, touched)), batch1)
         self._link_untouched_partitions(
             self._data_dir(parent), target,
             {hive_partition_value(t) for t in touched})
@@ -797,26 +811,27 @@ class ParquetUpsertTable:
         derivation parameter for EVERY row (e.g. re-sharding a semantic
         index's subcluster modulus) — a merge would be a full rewrite
         anyway, without replace's drop-absent-keys semantics."""
-        batch1 = batch.dropDuplicates(self.key_cols)
-        if batch1.isEmpty():
-            # an all-files-empty parquet version is unreadable ('Unable
-            # to infer schema'); an empty replace has no valid target
-            # state to write, so refuse loudly instead of bricking reads
-            raise ValueError(
-                "replace() with an empty batch would write an "
-                "unreadable version — use delete_keys() to empty a "
-                "table")
-        parent = self.current_version()
-        target = self._stage_dir()
-        writer = batch1.write.mode("overwrite")
-        if self.partition_col:
-            writer = writer.partitionBy(self.partition_col)
-        writer.parquet(target)
-        # replace is O(table) by design (every row rewritten), so its
-        # recording is the full old-vs-new diff — same cost shape
-        self._record_changes(target, self._read_at(parent),
-                             batch=batch1)
-        self._publish(target, parent, commit_meta)
+        # one evaluation: the write and the recording share survivors
+        with _evaluated_once(batch.dropDuplicates(self.key_cols)) as batch1:
+            if not batch1.count():
+                # an all-files-empty parquet version is unreadable
+                # ('Unable to infer schema'); an empty replace has no
+                # valid target state to write, so refuse loudly instead
+                # of bricking reads
+                raise ValueError(
+                    "replace() with an empty batch would write an "
+                    "unreadable version — use delete_keys() to empty a "
+                    "table")
+            parent = self.current_version()
+            target = self._stage_dir()
+            writer = batch1.write.mode("overwrite")
+            if self.partition_col:
+                writer = writer.partitionBy(self.partition_col)
+            writer.parquet(target)
+            # replace is O(table) by design (every row rewritten), so
+            # its recording is the full old-vs-new diff — same cost
+            self._record_changes(target, self._read_at(parent), batch1)
+            self._publish(target, parent, commit_meta)
 
     @_retrying
     def delete_keys(self, keys: DataFrame,
@@ -839,9 +854,9 @@ class ParquetUpsertTable:
         pc = self.partition_col
         if pc and pc in keys.columns:
             touched = [r[0] for r in keys.select(pc).distinct().collect()]
-            remaining = _anti_by_keys(
+            remaining = _key_join(
                 current.filter(_touched_filter(pc, touched)),
-                keys, self.key_cols)
+                keys, self.key_cols, "left_anti")
             if remaining.isEmpty() and not any(
                     os.path.isdir(os.path.join(self._data_dir(parent), d))
                     and "=" in d and unquote(d.split("=", 1)[1])
@@ -857,17 +872,18 @@ class ParquetUpsertTable:
                     .parquet(target)
                 # every partition was touched, so old = whole table;
                 # the diff records each surviving-nothing row a delete
-                self._record_changes(target, current)
+                self._record_changes(target, current, remaining)
                 self._publish(target, parent, commit_meta)
                 return
             remaining.write.mode("overwrite").partitionBy(pc).parquet(target)
             self._record_changes(
-                target, current.filter(_touched_filter(pc, touched)))
+                target, current.filter(_touched_filter(pc, touched)),
+                remaining)
             self._link_untouched_partitions(
                 self._data_dir(parent), target,
                 {hive_partition_value(t) for t in touched})
         else:
-            remaining = _anti_by_keys(current, keys, self.key_cols)
+            remaining = _key_join(current, keys, self.key_cols, "left_anti")
             if remaining.isEmpty():
                 # deleting every row must still leave one schema-ful
                 # (empty) parquet file, or the version is unreadable
@@ -876,7 +892,7 @@ class ParquetUpsertTable:
             if pc:
                 writer = writer.partitionBy(pc)
             writer.parquet(target)
-            self._record_changes(target, current)
+            self._record_changes(target, current, remaining)
         self._publish(target, parent, commit_meta)
 
     @_retrying
@@ -1135,14 +1151,8 @@ class ParquetUpsertTable:
         # the recording must say "no changes" explicitly: a version
         # with no _changes dir falls back to the recompute diff
         # (which would also be empty, but at full-diff cost)
-        cur = self._read_at(parent)
-        empty = cur.limit(0)
-        diff = self._diff_frames(empty, empty)
-        if self.record_change_values:
-            diff = self._attach_values(diff, empty)
-        if self.record_change_preimages:
-            diff = self._attach_preimages(diff, empty)
-        self._write_changes(target, diff, hints=self._type_hints(cur))
+        empty = self._read_at(parent).limit(0)
+        self._record_changes(target, empty, empty)
         self._publish(target, parent, commit_meta)
 
     @_retrying
@@ -1544,27 +1554,18 @@ class ParquetUpsertTable:
                 continue
             if v > 0 and v - 1 not in vs:
                 continue
-            old = self.read_version(v - 1) if v > 0 else None
-            diff = self._diff_frames(old, self.read_version(v))
-            if self.record_change_values:
-                diff = self._attach_values(diff, self.read_version(v))
-            if self.record_change_preimages:
-                diff = self._attach_preimages(diff, old)
-            diff = self._repair_void(diff, self._type_hints(old))
             tmp = os.path.join(self._data_dir(v),
                                f"_changes.tmp-{uuid.uuid4().hex[:8]}")
-            lead = [*self.key_cols, "change_type"]
-            out = diff.select(
-                *lead, *[c for c in diff.columns if c not in lead])
-            out.write.mode("overwrite").parquet(tmp)
-            if not self._has_parquet(tmp):
-                out.repartition(1).write.mode("overwrite").parquet(tmp)
+            self._record_changes(
+                tmp, self.read_version(v - 1) if v > 0 else None,
+                self.read_version(v))
             try:
-                os.rename(tmp, rec)
+                os.rename(os.path.join(tmp, self._CHANGES_DIR), rec)
             except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
+                pass
             else:
                 done.append(v)
+            shutil.rmtree(tmp, ignore_errors=True)
         return done
 
     def change_feed(self, from_version: int = 0) -> DataFrame:
@@ -1617,29 +1618,35 @@ class ParquetUpsertTable:
 
 
 class HashStateTable:
-    """The ``_aether/entityHash`` state (``firebase/app/config.py:37``,
-    get/set at ``firebase/app/helpers.py:51-58``) as a keyed table of
-    (id, hash) — the join side of O10 change detection."""
+    """The O10 change gate over the ``_aether/entityHash`` state
+    (``firebase/app/config.py:37``, ``helpers.py:51-58``), kept as the
+    doc table's own ``hash`` column — the reference's separate path
+    exists only because Firebase cannot join — so documents and
+    hashes land in ONE merge commit."""
 
     def __init__(self, spark: SparkSession, path: str):
+        # compatibility surface only: ``path`` is never written
         self.table = ParquetUpsertTable(spark, path, ["id"])
-        self.spark = spark
 
-    def needs_update(self, incoming: DataFrame) -> DataFrame:
+    def needs_update(self, incoming: DataFrame,
+                     doc_table: ParquetUpsertTable) -> DataFrame:
         """Rows of ``incoming(id, hash, ...)`` that are new or changed:
-        anti-join on (id, hash). Implements the *documented* intent of
-        ``remote_msg_needs_update`` (``firebase/app/helpers.py:61-67``)
-        — update on mismatch — fixing the reference's missing
-        ``return True`` fall-through."""
-        stored = self.table.read()
-        if stored is None:
+        anti-join on (id, hash) against ``doc_table``. Implements the
+        *documented* intent of ``remote_msg_needs_update``
+        (``firebase/app/helpers.py:61-67``) — update on mismatch —
+        fixing the reference's missing ``return True`` fall-through.
+        A table written before it carried hashes gates nothing."""
+        stored = doc_table.read()
+        if stored is None or "hash" not in stored.columns:
             return incoming
         return incoming.join(stored.select("id", "hash"),
                              ["id", "hash"], "left_anti")
 
-    def record(self, rows: DataFrame) -> None:
-        """Persist (id, hash) for written docs."""
-        self.table.merge(rows.select("id", "hash"))
+    def record(self, rows: DataFrame,
+               doc_table: ParquetUpsertTable) -> None:
+        """Commit ``rows`` — documents with their ``hash`` — to
+        ``doc_table`` in one merge (an empty frame commits nothing)."""
+        doc_table.merge(rows)
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str],

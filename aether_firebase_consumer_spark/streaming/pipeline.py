@@ -27,7 +27,11 @@ from aether_firebase_consumer_spark.functions.hashing import content_hash_expr
 from aether_firebase_consumer_spark.operators.filtering import FilterConfig, apply_filter
 from aether_firebase_consumer_spark.operators.masking import MaskConfig, apply_mask
 from aether_firebase_consumer_spark.operators.routing import Subscription, route_topics
-from aether_firebase_consumer_spark.sinks.upsert import HashStateTable, ParquetUpsertTable
+from aether_firebase_consumer_spark.sinks.upsert import (
+    HashStateTable,
+    ParquetUpsertTable,
+    latest_per_key,
+)
 from aether_firebase_consumer_spark.streaming.schema_drift import SchemaDriftDetector
 
 
@@ -67,7 +71,11 @@ def transform(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 class StreamingUpsertJob:
     """foreachBatch sink: sync-mode gate (O8) + hash-gated change
-    detection (O10) + MERGE upsert (O12) + schema drift log (O14)."""
+    detection (O10) + MERGE upsert (O12) + schema drift log (O14).
+
+    The content hash is a column of ``doc_table``, gated by
+    ``hash_table`` against the table's own ``(id, hash)``: a writing
+    trigger makes exactly ONE commit (``hash_table``'s path is unused)."""
 
     def __init__(self, cfg: PipelineConfig, doc_table: ParquetUpsertTable,
                  hash_table: HashStateTable):
@@ -84,39 +92,20 @@ class StreamingUpsertJob:
         if mode in ("consume", "none"):
             # CONSUME/NONE: read and drop (firebase/app/artifacts.py:390-394)
             return
-        hashed = batch.withColumn("hash", content_hash_expr(batch))
+        # hash the document, not its position in the log: a
+        # byte-identical re-send at a new offset must match its hash
+        content = [c for c in batch.columns if c != self.cfg.seq_col]
+        hashed = batch.withColumn("hash", content_hash_expr(batch, content))
         if self.cfg.id_col != "id":
             hashed = hashed.withColumnRenamed(self.cfg.id_col, "id")
-        # collapse to ONE version per id BEFORE anything downstream:
-        # doc merge and hash record must see the SAME survivor, or the
-        # doc table can hold v1 while the hash table records v2 and the
-        # anti-join then suppresses v2 forever. With seq_col the
-        # survivor is the latest by offset; without, it is arbitrary
-        # but consistently shared by both writes.
         if self.cfg.seq_col is not None:
-            from aether_firebase_consumer_spark.sinks.upsert import (
-                latest_per_key,
-            )
+            # last writer wins: the latest version per id by offset
             hashed = latest_per_key(hashed, ["id"], self.cfg.seq_col)
-        else:
-            hashed = hashed.dropDuplicates(["id"])
         if mode == "sync":
-            to_write = self.hash_table.needs_update(hashed)
-        else:  # forward: unconditional
-            to_write = hashed
-        # cache: the anti-join result feeds two writes
-        to_write = to_write.persist()
-        try:
-            # an empty gated batch (nothing changed / empty trigger) must
-            # be a NO-OP: ParquetUpsertTable.merge on an empty frame
-            # would rewrite the whole table into a new version —
-            # O(table) per idle micro-batch at scale
-            if to_write.isEmpty():
-                return
-            self.doc_table.merge(to_write.drop("hash"))
-            self.hash_table.record(to_write)
-        finally:
-            to_write.unpersist()
+            hashed = self.hash_table.needs_update(hashed, self.doc_table)
+        # forward: unconditional. Either way one merge commits docs and
+        # hashes; an empty gated batch commits nothing
+        self.hash_table.record(hashed, self.doc_table)
 
     def writer(self, stream: DataFrame, checkpoint: str):
         # observe(): per-batch row count + distinct-path reach computed

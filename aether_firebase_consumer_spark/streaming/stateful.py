@@ -5,8 +5,9 @@ via ``applyInPandasWithState`` — the reference's O10
 remote read.
 
 Where ``sinks.upsert.HashStateTable`` implements O10 as a per-micro-
-batch anti-join against a persisted table (the replayable, rescalable
-default), this operator keeps the last-seen content hash *in Spark's
+batch anti-join against the doc table's own ``hash`` column (the
+replayable, rescalable default: gate and write commit as one table
+version), this operator keeps the last-seen content hash *in Spark's
 keyed state store*: one state row per document id, checkpointed with
 the query, recovered on restart. That is the right shape when the
 change-gate must be low-latency and inline (no sink round-trip), and it

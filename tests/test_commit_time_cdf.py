@@ -57,26 +57,44 @@ def _assert_recorded_equals_diff(t):
                 f"version {v} recorded feed diverges from the diff"
 
 
-@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "pc"])
-def test_every_op_records_the_exact_diff(spark, tmp_path, partitioned):
+def _image_rows(df):
+    """Change rows as sets of their non-null fields: a verbatim
+    recording omits columns a derived image carries as nulls (a
+    delete's post-image, an insert's pre-image)."""
+    return sorted(tuple(sorted((c, r[c]) for c in df.columns
+                               if r[c] is not None))
+                  for r in df.collect())
+
+
+@pytest.mark.parametrize("partitioned,images",
+                         [(False, False), (True, False),
+                          (False, True), (True, True)],
+                         ids=["flat", "pc", "flat-images", "pc-images"])
+def test_every_op_records_the_exact_diff(spark, tmp_path, partitioned,
+                                         images):
     kw = {"partition_col": "p"} if partitioned else {}
-    t = ParquetUpsertTable(spark, str(tmp_path / "t"), ["k"],
-                           retain_versions=30, **kw)
 
     def df(rows, ddl="k bigint, v string, p string"):
         return spark.createDataFrame(rows, ddl)
 
-    # v0 create, v1 update+insert+no-op-rewrite, v2 delete_keys,
-    # v3 delete_where, v4 optimize (no changes), v5 replace
-    t.merge(df([(1, "a", "x"), (2, "b", "x"), (3, "c", "y")]))
-    t.merge(df([(2, "B", "x"),            # update
-                (3, "c", "y"),            # identical row → NOT a change
-                (4, "d", "z")]))          # insert
-    t.delete_keys(df([(1, "a", "x")]).select("k", "p")
-                  if partitioned else df([(1, "a", "x")]).select("k"))
-    assert t.delete_where(("k", ">=", 4)) == 1
-    t.optimize(num_files=2)
-    t.replace(df([(2, "B", "x"), (9, "z", "y")]))
+    def run_ops(t):
+        # v0 create, v1 update+insert+no-op-rewrite, v2 delete_keys,
+        # v3 delete_where, v4 optimize (no changes), v5 replace
+        t.merge(df([(1, "a", "x"), (2, "b", "x"), (3, "c", "y")]))
+        t.merge(df([(2, "B", "x"),        # update
+                    (3, "c", "y"),        # identical row → NOT a change
+                    (4, "d", "z")]))      # insert
+        t.delete_keys(df([(1, "a", "x")]).select("k", "p")
+                      if partitioned else df([(1, "a", "x")]).select("k"))
+        assert t.delete_where(("k", ">=", 4)) == 1
+        t.optimize(num_files=2)
+        t.replace(df([(2, "B", "x"), (9, "z", "y")]))
+
+    t = ParquetUpsertTable(spark, str(tmp_path / "t"), ["k"],
+                           retain_versions=30,
+                           record_change_values=images,
+                           record_change_preimages=images, **kw)
+    run_ops(t)
 
     assert t.current_version() == 5
     # every version carries a recording (readable parquet)
@@ -90,6 +108,15 @@ def test_every_op_records_the_exact_diff(spark, tmp_path, partitioned):
     assert _set(t.changes(4)) == []
     # replace: key 2's row is byte-identical → not a change
     assert _set(t.changes(5)) == [(3, "delete"), (9, "insert")]
+    if images:
+        # the images each op recorded from the frames it wrote equal
+        # the images derived from the written versions
+        ref = ParquetUpsertTable(spark, str(tmp_path / "ref"), ["k"],
+                                 retain_versions=30, **kw)
+        run_ops(ref)
+        for v in t.versions():
+            assert _image_rows(t.changes_with_images(v)) == \
+                _image_rows(ref.changes_with_images(v)), f"v{v} images"
 
 
 def test_schema_evolution_merge_records_the_diff(spark, tmp_path):
@@ -115,6 +142,22 @@ def test_moved_key_records_update_not_duplicate(spark, tmp_path):
     t.merge(df([(1, "y")]))      # key 1 moves x → y
     _assert_recorded_equals_diff(t)
     assert _set(t.changes(1)) == [(1, "update")]
+
+
+def test_numeric_partition_values_record_no_spurious_update(spark, tmp_path):
+    """String partition values that look numeric read back as int (the
+    directory names are type-inferred); the recording diffs in the type
+    the op wrote, so a byte-identical row is still no change."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "t"), ["k"],
+                           partition_col="p", retain_versions=10,
+                           record_change_preimages=True)
+    df = lambda rows: spark.createDataFrame(rows, "k bigint, p string")
+    t.merge(df([(1, "10"), (2, "20")]))
+    t.merge(df([(1, "10"), (3, "30")]))   # key 1 unchanged
+    t.replace(df([(1, "10"), (3, "30")]))  # key 2 dropped, rest unchanged
+    _assert_recorded_equals_diff(t)
+    assert _set(t.changes(1)) == [(3, "insert")]
+    assert _set(t.changes(2)) == [(2, "delete")]
 
 
 def test_poll_reads_only_recorded_change_files(spark, tmp_path):

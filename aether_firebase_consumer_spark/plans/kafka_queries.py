@@ -106,9 +106,8 @@ _CODEC_BROKERS: dict[str, tuple] = {}
 def _orders_codec_broker(spark: SparkSession, sf_dir: str):
     """Broker holding the SAME orders subset as
     :func:`_orders_broker`, but shipped as COMPRESSED magic-2 record
-    batches — one codec per partition: gzip, pure-Python Snappy,
-    pure-Python LZ4 frame, pure-Python zstd frame, and uncompressed
-    as the control — with
+    batches — one codec per partition: gzip, Snappy, LZ4 frame,
+    zstd frame, and uncompressed as the control — with
     deterministic CreateTime timestamps (o_orderkey ms)."""
     cached = _CODEC_BROKERS.get(sf_dir)
     if cached:
@@ -158,12 +157,10 @@ def _orders_codec_broker(spark: SparkSession, sf_dir: str):
 )
 def kafka_roundtrip_orders_compressed(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    """The compressed-batch wire path under the oracle gate (round 7
-    — the gzip/Snappy codecs landed in round 6 pytest-only; LZ4 and
-    zstd landed this round): the orders subset ships as magic-2
-    record batches with one codec per partition — gzip, pure-Python
-    Snappy, pure-Python LZ4 frame, pure-Python zstd frame
-    (RFC 8878), uncompressed control — with CreateTime
+    """The compressed-batch wire path under the oracle gate: the
+    orders subset ships as magic-2 record batches with one codec per
+    partition — gzip, Snappy, LZ4 frame, zstd frame (RFC 8878),
+    uncompressed control — with CreateTime
     timestamps, read back through ``kafka_py``'s fetch → decompress →
     record-batch decode. The oracle adds the produced timestamp
     (o_orderkey ms) so the per-record CreateTime survives compression

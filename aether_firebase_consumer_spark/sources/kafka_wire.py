@@ -24,7 +24,8 @@ the no-jar escape hatch, exactly like ``avro_codec`` is for Avro.
 Beyond the v0 core, the broker/client pair speaks the later protocol
 pieces a production deployment leans on, all from the public spec:
 magic-2 record batches (Produce v3 / Fetch v4, CRC32C, per-record
-timestamps, gzip/Snappy/LZ4/zstd codecs), consumer-group membership
+timestamps, gzip/Snappy/LZ4/zstd codecs — the last three on
+pyarrow's C codecs), consumer-group membership
 (JoinGroup/SyncGroup/Heartbeat/LeaveGroup with negotiated protocols,
 KIP-345 static membership via JoinGroup v5), KIP-98 idempotent
 produce (InitProducerId + sequence fencing), and secured listeners
@@ -67,6 +68,7 @@ survivors observe as REBALANCE_IN_PROGRESS on their next heartbeat.
 from __future__ import annotations
 
 import bisect
+import gzip
 import socket
 import socketserver
 import struct
@@ -323,6 +325,88 @@ ATTR_CONTROL = 1 << 5
 #: attributes bits 0-2: compression codec ids from the public spec
 CODEC_NONE, CODEC_GZIP, CODEC_SNAPPY, CODEC_LZ4, CODEC_ZSTD = \
     0, 1, 2, 3, 4
+_CODEC_IDS = {"gzip": CODEC_GZIP, "snappy": CODEC_SNAPPY,
+              "lz4": CODEC_LZ4, "zstd": CODEC_ZSTD}
+_CODEC_NAMES = {v: k for k, v in _CODEC_IDS.items()}
+
+#: LZ4 frame header: magic, FLG 0x60 (version 1, independent blocks,
+#: no checksums), BD 0x40 (64 KiB blocks), header checksum of ``60 40``
+_LZ4_FRAME_HEADER = bytes.fromhex("04224d18604082")
+_LZ4_BLOCK_MAX = 64 * 1024
+#: snappy-java's ``SnappyOutputStream`` stream magic
+_XERIAL_MAGIC = b"\x82SNAPPY\x00"
+
+
+def compress_records(codec: str, data: bytes) -> bytes:
+    """The records section of a batch compressed as ``codec``:
+    gzip via stdlib, the rest via pyarrow's C codecs. Snappy is one
+    raw block and zstd one frame; LZ4 is a frame built here, since
+    pyarrow's own lz4 frames link blocks past 64 KiB and Kafka's Java
+    reader decodes each block on its own."""
+    if codec == "gzip":
+        return gzip.compress(data, mtime=0)  # deterministic
+    import pyarrow as pa
+    if codec != "lz4":
+        return pa.compress(data, codec=codec, asbytes=True)
+    out = bytearray(_LZ4_FRAME_HEADER)
+    for i in range(0, len(data), _LZ4_BLOCK_MAX):
+        chunk = data[i:i + _LZ4_BLOCK_MAX]
+        block = pa.compress(chunk, codec="lz4_raw", asbytes=True)
+        if len(block) < len(chunk):
+            out += struct.pack("<I", len(block)) + block
+        else:                              # stored: high size bit
+            out += struct.pack("<I", len(chunk) | 1 << 31) + chunk
+    out += bytes(4)                        # EndMark
+    return bytes(out)
+
+
+def decompress_records(codec_id: int, data: bytes) -> bytes:
+    """Inverse of :func:`compress_records` for any standard producer:
+    lz4 and zstd frames need not state their content size, zstd may
+    hold several (or skippable) frames, and snappy is a raw block or
+    snappy-java's xerial stream. Corrupt or truncated input raises
+    ``ValueError`` naming the codec."""
+    name = _CODEC_NAMES[codec_id]
+    try:
+        if codec_id == CODEC_GZIP:
+            return gzip.decompress(data)
+        if codec_id == CODEC_SNAPPY:
+            if data[:8] != _XERIAL_MAGIC:
+                return _snappy_block(data)
+            # 8-byte magic, int32 version, int32 compat, then
+            # [int32 length][raw block] chunks
+            out, pos = [], 16
+            while pos < len(data):
+                (n,) = struct.unpack_from(">i", data, pos)
+                chunk = data[pos + 4:pos + 4 + n]
+                if n < 0 or len(chunk) != n:
+                    raise ValueError("truncated xerial chunk")
+                out.append(_snappy_block(chunk))
+                pos += 4 + n
+            return b"".join(out)
+        import pyarrow as pa
+        return pa.CompressedInputStream(pa.BufferReader(data), name).read()
+    except (OSError, EOFError, ValueError, struct.error,
+            zlib.error) as exc:
+        raise ValueError(f"{name} record-batch payload is corrupt or "
+                         f"truncated: {exc}") from None
+
+
+def _snappy_block(block: bytes) -> bytes:
+    """One raw snappy block, sized by its leading uvarint."""
+    import pyarrow as pa
+    size = shift = pos = 0
+    while True:
+        if pos == len(block) or shift > 28:
+            raise ValueError("bad snappy length preamble")
+        b = block[pos]
+        pos += 1
+        size |= (b & 0x7F) << shift
+        if b < 0x80:
+            break
+        shift += 7
+    return pa.decompress(block, decompressed_size=size, codec="snappy",
+                         asbytes=True)
 
 
 def encode_record_batch(
@@ -338,16 +422,10 @@ def encode_record_batch(
     and zigzag deltas. ``log_append_time`` sets the attributes bit
     real brokers use to mark broker-stamped (vs producer CreateTime)
     timestamps. ``codec="gzip"``/``"snappy"``/``"lz4"``/``"zstd"``
-    compress the
-    RECORDS section (only — the header stays plain, per the spec); the
-    CRC32C covers the batch body as stored, compressed bytes included.
-    Snappy here is the raw block format (``sources/snappy_py``) —
-    magic-2 batches never use the legacy xerial framing — LZ4 is
-    the standard FRAME format (``sources/lz4_py``), per the magic-≥1
-    convention real brokers follow, and zstd is the standard RFC 8878
-    frame (``sources/zstd_py``; our producer emits store-only frames,
-    and the decoder accepts anything a real broker serves)."""
-    if codec not in (None, "gzip", "snappy", "lz4", "zstd"):
+    compress the RECORDS section (only — the header stays plain, per
+    the spec) through :func:`compress_records`; the CRC32C covers the
+    batch body as stored, compressed bytes included."""
+    if codec is not None and codec not in _CODEC_IDS:
         raise ValueError(f"unsupported record-batch codec {codec!r} "
                          "(this image: gzip, snappy, lz4, or zstd)")
     if not entries:
@@ -392,22 +470,9 @@ def encode_record_batch(
     if transactional:
         attrs |= ATTR_TRANSACTIONAL
     payload = bytes(records)
-    if codec == "gzip":
-        import gzip as _gzip
-        attrs |= CODEC_GZIP
-        payload = _gzip.compress(payload, mtime=0)  # deterministic
-    elif codec == "snappy":
-        from aether_firebase_consumer_spark.sources import snappy_py
-        attrs |= CODEC_SNAPPY
-        payload = snappy_py.compress(payload)
-    elif codec == "lz4":
-        from aether_firebase_consumer_spark.sources import lz4_py
-        attrs |= CODEC_LZ4
-        payload = lz4_py.compress_frame(payload)
-    elif codec == "zstd":
-        from aether_firebase_consumer_spark.sources import zstd_py
-        attrs |= CODEC_ZSTD
-        payload = zstd_py.compress(payload)
+    if codec is not None:
+        attrs |= _CODEC_IDS[codec]
+        payload = compress_records(codec, payload)
     body = _Writer()                       # attributes .. records
     body.i16(attrs)
     body.i32(entries[-1][0] - base_off)    # lastOffsetDelta
@@ -473,25 +538,14 @@ def decode_record_batches(data: bytes, *, validate_crc: bool = True,
                 f"record batch at offset {base_off}: CRC32C mismatch")
         attrs, _last_delta, base_ts = struct.unpack_from(">hiq", body, 0)
         comp = attrs & 0x07
-        if comp not in (CODEC_NONE, CODEC_GZIP, CODEC_SNAPPY,
-                        CODEC_LZ4, CODEC_ZSTD):
+        if comp != CODEC_NONE and comp not in _CODEC_NAMES:
             raise ValueError(
                 f"compressed record batch codec {comp} unsupported "
                 "(this image decodes none/gzip/snappy/lz4/zstd)")
         (count,) = struct.unpack_from(">i", body, 36)
         recs = body[40:]
-        if comp == CODEC_GZIP:
-            import gzip as _gzip
-            recs = _gzip.decompress(recs)
-        elif comp == CODEC_SNAPPY:
-            from aether_firebase_consumer_spark.sources import snappy_py
-            recs = snappy_py.decompress(bytes(recs))
-        elif comp == CODEC_LZ4:
-            from aether_firebase_consumer_spark.sources import lz4_py
-            recs = lz4_py.decompress_frame(bytes(recs))
-        elif comp == CODEC_ZSTD:
-            from aether_firebase_consumer_spark.sources import zstd_py
-            recs = zstd_py.decompress(bytes(recs))
+        if comp != CODEC_NONE:
+            recs = decompress_records(comp, recs)
         p = 0
         for _ in range(count):
             rec_len, p = _get_varint(recs, p)

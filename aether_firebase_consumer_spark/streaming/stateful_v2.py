@@ -1,4 +1,4 @@
-"""Streaming per-key top-k — bounded keyed state, two API bindings.
+"""Streaming per-key top-k — bounded keyed state.
 
 The operator: each key maintains the k largest (value, id) pairs ever
 seen and emits its refreshed ranking whenever new rows arrive. This is
@@ -7,17 +7,11 @@ the leaderboard / per-entity-extremes pattern: state is O(k) per key
 plan adds exactly one shuffle (hash partition on the key), so
 throughput scales with executors like any keyed streaming aggregate.
 
-Bindings:
-
-- :func:`streaming_topk_per_key` — ``applyInPandasWithState``
-  (GroupState), the binding that runs in this image. State is the
-  top-k lists themselves (two bounded arrays).
-- :func:`streaming_topk_per_key_v2` — Spark 4's
-  ``transformWithStateInPandas`` (named ListState per key, TTL/timer
-  capable). Its Python↔JVM state protocol needs ``google.protobuf``,
-  which this image lacks, so the binding import-gates with a clear
-  error; on an environment with protobuf it is the preferred form
-  (finer state schema, per-variable TTL, timers).
+:func:`streaming_topk_per_key` binds it to ``applyInPandasWithState``
+(GroupState); the state is the top-k lists themselves (two bounded
+arrays). Spark 4's ``transformWithStateInPandas`` is not bound: its
+Python↔JVM state protocol needs ``google.protobuf``, which this image
+lacks.
 
 The reference engine has no stateful surface at all (its consumer is
 stateless per message, ``firebase/app/artifacts.py:302-327``); this is
@@ -33,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-#: Output schema of both bindings.
+#: Output schema of :func:`streaming_topk_per_key`.
 TOPK_OUTPUT_SCHEMA = (
     "user_id bigint, rank int, value double, event_id bigint"
 )
@@ -87,60 +81,3 @@ def streaming_topk_per_key(events: DataFrame, k: int = 3) -> DataFrame:
                 stateStructType="values array<double>, ids array<bigint>",
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def streaming_topk_per_key_v2(events: DataFrame, k: int = 3,
-                              time_mode: str = "None") -> DataFrame:
-    """``transformWithStateInPandas`` binding (named ListState).
-    Requires ``google.protobuf`` (the state-server wire protocol) —
-    absent from this image, so this gates with a clear error; the
-    processor itself is defined unconditionally and unit-testable."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as err:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "package (absent in this environment); use "
-            "streaming_topk_per_key (applyInPandasWithState) instead"
-        ) from err
-    return (events.select("user_id", "value", "event_id")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=TopKProcessor(k),
-                outputStructType=TOPK_OUTPUT_SCHEMA,
-                outputMode="Append",
-                timeMode=time_mode))
-
-
-class TopKProcessor:
-    """StatefulProcessor for the v2 binding: top-k in a named
-    ListState, merge + truncate per batch. Defined structurally (no
-    base-class import at module scope keeps the module importable
-    without protobuf); duck-typed against
-    ``pyspark.sql.streaming.stateful_processor.StatefulProcessor``."""
-
-    def __init__(self, k: int = 3):
-        self.k = k
-
-    def init(self, handle) -> None:
-        self.top = handle.getListState(
-            "topk", "value double, event_id bigint")
-
-    def handleInputRows(self, key, rows, timerValues):
-        pairs = [(float(r.value), int(r.event_id))
-                 for r in (self.top.get() or [])]
-        for pdf in rows:
-            pairs.extend(zip(pdf["value"].astype(float),
-                             pdf["event_id"].astype(int)))
-        pairs = _merge_topk(pairs, self.k)
-        self.top.put(pairs)
-        (uid,) = key
-        yield pd.DataFrame({
-            "user_id": [int(uid)] * len(pairs),
-            "rank": list(range(1, len(pairs) + 1)),
-            "value": [v for v, _ in pairs],
-            "event_id": [e for _, e in pairs],
-        })
-
-    def close(self) -> None:
-        pass

@@ -31,7 +31,6 @@ SLOW_MODULES = frozenset({
     "test_kafka_security", "test_kafka_real_broker",
     "test_avro_pipeline_e2e",
     # codec goldens (spec bitstreams + CLI-golden round trips)
-    "test_zstd_py", "test_lz4_py", "test_snappy_py",
     "test_webp_codec", "test_jpeg_codec", "test_image_codecs",
     "test_mp4_codec", "test_mpeg_audio", "test_avro_codec",
     "test_sources_multimodal",

@@ -495,11 +495,11 @@ def test_gzip_record_batches_end_to_end():
     legit[21 + 1] = (legit[21 + 1] & ~0x07) | 0x05   # attrs ← codec 5
     with pytest.raises(ValueError, match="codec 5 unsupported"):
         decode_record_batches(bytes(legit), validate_crc=False)
-    # codec 4 IS dispatched to the zstd decoder now: flipping the attrs
-    # on an uncompressed body reaches zstd_py, which rejects the garbage
-    # by frame magic rather than silently mis-parsing
+    # codec 4 IS dispatched to the zstd decoder: flipping the attrs on
+    # an uncompressed body reaches it, and it rejects the garbage by
+    # name rather than silently mis-parsing
     legit[21 + 1] = (legit[21 + 1] & ~0x07) | 0x04   # attrs ← codec 4
-    with pytest.raises(ValueError, match="magic"):
+    with pytest.raises(ValueError, match="zstd record-batch payload"):
         decode_record_batches(bytes(legit), validate_crc=False)
 
     with MiniKafkaBroker(clock=lambda: 1, fetch_codec="gzip") as b:

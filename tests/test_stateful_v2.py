@@ -1,14 +1,12 @@
-"""Streaming per-key top-k (bounded keyed state) — both bindings."""
+"""Streaming per-key top-k (bounded keyed state)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from aether_firebase_consumer_spark.streaming.stateful_v2 import (
     streaming_topk_per_key,
-    streaming_topk_per_key_v2,
 )
 from aether_firebase_consumer_spark.tables import normalize_event_ts
 
@@ -60,23 +58,3 @@ def test_streaming_topk_matches_batch_across_batches(spark, tmp_path):
                 (-best[key][0], best[key][1]):
             best[key] = cand
     assert best == expected
-
-
-def test_topk_v2_gates_without_protobuf(spark):
-    """transformWithStateInPandas needs google.protobuf; without it the
-    v2 binding must fail loudly at build time, not at runtime."""
-    ev = normalize_event_ts(spark.read.parquet(f"{SF}/events.parquet"))
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        got = {(r["user_id"], r["rank"]): (r["value"], r["event_id"])
-               for r in streaming_topk_per_key_v2(ev, k=3).collect()}
-        expected = {(r["user_id"], r["rank"]): (r["value"], r["event_id"])
-                    for r in _batch_topk(ev).collect()}
-        assert got == expected
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_topk_per_key_v2(ev, k=3)

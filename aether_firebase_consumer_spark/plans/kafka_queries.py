@@ -63,7 +63,7 @@ def _orders_broker(spark: SparkSession, sf_dir: str):
                 by_part.setdefault(r.o_orderkey % 5, []).append(
                     (str(r.o_orderkey).encode(), payload))
             for part, msgs in by_part.items():
-                c.produce(topic, part, msgs)
+                c.produce_records(topic, part, msgs)
     _BROKERS[sf_dir] = (broker.bootstrap, topic)
     return _BROKERS[sf_dir]
 
@@ -237,7 +237,7 @@ def _customer_avro_broker(spark: SparkSession, sf_dir: str):
                 (str(r.c_custkey).encode(), payload))
         for part, msgs in by_part.items():
             for i in range(0, len(msgs), 500):
-                c.produce(topic, part, msgs[i:i + 500])
+                c.produce_records(topic, part, msgs[i:i + 500])
     _AVRO_BROKERS[sf_dir] = (broker.bootstrap, topic)
     return _AVRO_BROKERS[sf_dir]
 
@@ -336,7 +336,7 @@ def _run_stream_pipeline(spark: SparkSession, sf_dir: str) -> str:
                 by_part.setdefault(r.event_id % 2, []).append(
                     (doc["id"].encode(), _json.dumps(doc).encode()))
             for part, msgs in by_part.items():
-                c.produce(topic, part, msgs)
+                c.produce_records(topic, part, msgs)
 
     workdir = tempfile.mkdtemp(prefix="kafka_pipeline_q_")
     stream = (spark.readStream.format("kafka_py")

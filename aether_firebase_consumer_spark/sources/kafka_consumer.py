@@ -36,7 +36,6 @@ import time as _time
 from typing import Optional
 
 from aether_firebase_consumer_spark.sources.kafka_wire import (
-    API_FETCH,
     EARLIEST,
     LATEST,
     GroupMembershipError,
@@ -46,28 +45,46 @@ from aether_firebase_consumer_spark.sources.kafka_wire import (
 )
 
 
-def _v4_rescue(client: KafkaWireClient,
-               pos_store: dict[tuple[str, int], int],
-               tp: tuple[str, int], pos: int
-               ) -> tuple[list[tuple[int, Optional[bytes],
-                                     Optional[bytes]]], bool]:
-    """A v0 fetch came back empty while offsets remain pending. On a
-    Fetch-v4 broker, retry at v4: record batches decode what the v0
-    message set truncated (an over-max_bytes message), and an EMPTY v4
-    response proves the remaining span holds no records at all — only
-    transaction control markers or compaction ghosts occupying
-    offsets — so the position skips to the high watermark instead of
-    stalling. Returns (records, skipped); both falsy means a genuine
-    stall (v0-only broker)."""
-    if client._max_version(API_FETCH) < 4:
-        return [], False
-    recs, hw, _lso = client.fetch_records_meta(tp[0], tp[1], pos)
-    if recs:
-        return [(off, k, v) for off, _ts, k, v in recs], False
-    if pos < hw:
-        pos_store[tp] = hw
-        return [], True
-    return [], False
+def _start_position(client: KafkaWireClient, group: str, reset: str,
+                    tp: tuple[str, int]) -> int:
+    """The group's committed position for ``tp``, else the
+    ``auto.offset.reset`` end of its log."""
+    committed = client.offset_fetch(group, *tp)
+    if committed >= 0:
+        return committed
+    time = EARLIEST if reset == "earliest" else LATEST
+    return client.list_offsets(tp[0], tp[1], time)
+
+
+def _poll_partition(client: KafkaWireClient,
+                    positions: dict[tuple[str, int], int],
+                    tp: tuple[str, int], isolation: str,
+                    out: list, max_messages: int) -> bool:
+    """One Fetch v4 at ``tp``'s position: append up to ``max_messages``
+    records to ``out`` as (topic, partition, offset, key, value) and
+    advance the position past them. Zero records below the bound —
+    the last stable offset for read_committed, else the high
+    watermark — means the span holds no visible records (transaction
+    markers, compaction gaps, aborted records: a v4 fetch always
+    returns its first record whole), so the position skips to the
+    bound. At or past it there is nothing to read yet; an open
+    transaction may sit below the log end. Returns whether the
+    position moved."""
+    pos = positions[tp]
+    recs, hw, lso = client.fetch_records_meta(tp[0], tp[1], pos,
+                                              isolation=isolation)
+    if not recs:
+        bound = lso if isolation == "read_committed" else hw
+        if pos < bound:
+            positions[tp] = bound
+            return True
+        return False
+    for off, _ts, key, value in recs:
+        if len(out) >= max_messages:
+            break
+        out.append((tp[0], tp[1], off, key, value))
+        positions[tp] = off + 1
+    return True
 
 
 class PollLoopConsumer:
@@ -99,18 +116,6 @@ class PollLoopConsumer:
         self._pos: dict[tuple[str, int], int] = {}
         self._rr = 0
 
-    def _position(self, tp: tuple[str, int]) -> int:
-        pos = self._pos.get(tp)
-        if pos is None:
-            committed = self._client.offset_fetch(self.group, *tp)
-            if committed >= 0:
-                pos = committed
-            else:
-                time = EARLIEST if self._reset == "earliest" else LATEST
-                pos = self._client.list_offsets(tp[0], tp[1], time)
-            self._pos[tp] = pos
-        return pos
-
     def poll(self, max_messages: int = 1
              ) -> list[tuple[str, int, int, Optional[bytes],
                              Optional[bytes]]]:
@@ -118,54 +123,19 @@ class PollLoopConsumer:
         round-robin across assigned partitions (the reference polls 1
         at a time — ``num_messages=1`` — which is just this with the
         default)."""
-        out = []
+        out: list[tuple[str, int, int, Optional[bytes],
+                        Optional[bytes]]] = []
         tried = 0
-        stalled = None
         while len(out) < max_messages and tried < len(self._tps):
             tp = self._tps[self._rr % len(self._tps)]
             self._rr += 1
             tried += 1
-            pos = self._position(tp)
-            end = self._client.list_offsets(tp[0], tp[1], LATEST)
-            if pos >= end:
-                continue
-            batch = self._client.fetch(tp[0], tp[1], pos)
-            if not batch:
-                rescued, skipped = _v4_rescue(self._client, self._pos,
-                                              tp, pos)
-                if rescued:
-                    for off, key, value in rescued:
-                        if len(out) >= max_messages:
-                            break
-                        out.append((tp[0], tp[1], off, key, value))
-                        self._pos[tp] = off + 1
-                    tried = 0
-                    continue
-                if skipped:
-                    tried = 0
-                    continue
-                # pos < end but the fetch yielded nothing: a v0 broker
-                # truncates at max_bytes, so a single message larger
-                # than the fetch size decodes to zero complete messages
-                # — resetting `tried` here would spin forever.
-                stalled = (tp, pos, end)
-                continue
-            for off, key, value in batch:
-                if len(out) >= max_messages:
-                    break
-                out.append((tp[0], tp[1], off, key, value))
-                self._pos[tp] = off + 1
-            tried = 0  # made progress: give every partition a new shot
-        if not out and stalled:
-            # a full round produced nothing while some partition still
-            # has pending offsets it cannot fetch — raise loudly
-            # (same contract as the Spark-side _read_range) instead of
-            # letting the caller's poll loop spin on empty results
-            (topic, part), pos, end = stalled
-            raise RuntimeError(
-                f"fetch at {topic}/{part}:{pos} returned no messages "
-                f"but log end is {end} — message larger than fetch "
-                "max_bytes, or log truncated")
+            if tp not in self._pos:
+                self._pos[tp] = _start_position(
+                    self._client, self.group, self._reset, tp)
+            if _poll_partition(self._client, self._pos, tp,
+                               "read_uncommitted", out, max_messages):
+                tried = 0  # made progress: give every partition a new shot
         return out
 
     def commit(self) -> None:
@@ -334,18 +304,6 @@ class GroupConsumer:
         except (GroupRebalanceError, GroupMembershipError):
             self._active = False
 
-    def _position(self, tp: tuple[str, int]) -> int:
-        pos = self._pos.get(tp)
-        if pos is None:
-            committed = self._client.offset_fetch(self.group, *tp)
-            if committed >= 0:
-                pos = committed
-            else:
-                time = EARLIEST if self._reset == "earliest" else LATEST
-                pos = self._client.list_offsets(tp[0], tp[1], time)
-            self._pos[tp] = pos
-        return pos
-
     # -- consumption ------------------------------------------------------
     def poll(self, max_messages: int = 1
              ) -> list[tuple[str, int, int, Optional[bytes],
@@ -360,70 +318,17 @@ class GroupConsumer:
         out: list[tuple[str, int, int, Optional[bytes],
                         Optional[bytes]]] = []
         tried = 0
-        stalled = None
         while (self.assignment and len(out) < max_messages
                and tried < len(self.assignment)):
             tp = self.assignment[self._rr % len(self.assignment)]
             self._rr += 1
             tried += 1
-            pos = self._position(tp)
-            if self._isolation == "read_committed":
-                # one RTT: records + LSO together. Zero records with
-                # pos < LSO means everything in [pos, LSO) belonged to
-                # aborted transactions (the broker filtered it) — fast
-                # forward past the span instead of stalling; pos ≥ LSO
-                # means no DECIDED data yet (an open transaction may
-                # sit below the log end), which is not a stall either.
-                recs, _hw, lso = self._client.fetch_records_meta(
-                    tp[0], tp[1], pos, isolation="read_committed")
-                if not recs:
-                    if pos < lso:
-                        self._pos[tp] = lso
-                        tried = 0
-                    continue
-                for off, _ts, key, value in recs:
-                    if len(out) >= max_messages:
-                        break
-                    out.append((tp[0], tp[1], off, key, value))
-                    self._pos[tp] = off + 1
+            if tp not in self._pos:
+                self._pos[tp] = _start_position(
+                    self._client, self.group, self._reset, tp)
+            if _poll_partition(self._client, self._pos, tp,
+                               self._isolation, out, max_messages):
                 tried = 0
-                continue
-            end = self._client.list_offsets(tp[0], tp[1], LATEST)
-            if pos >= end:
-                continue
-            batch = self._client.fetch(tp[0], tp[1], pos)
-            if not batch:
-                rescued, skipped = _v4_rescue(self._client, self._pos,
-                                              tp, pos)
-                if rescued:
-                    for off, key, value in rescued:
-                        if len(out) >= max_messages:
-                            break
-                        out.append((tp[0], tp[1], off, key, value))
-                        self._pos[tp] = off + 1
-                    tried = 0
-                    continue
-                if skipped:
-                    tried = 0
-                    continue
-                # pos < end but zero complete messages decoded — an
-                # over-max_bytes message on a v0-only broker; same
-                # stalled-partition detection as PollLoopConsumer.poll,
-                # or the caller's poll loop spins forever on empties
-                stalled = (tp, pos, end)
-                continue
-            for off, key, value in batch:
-                if len(out) >= max_messages:
-                    break
-                out.append((tp[0], tp[1], off, key, value))
-                self._pos[tp] = off + 1
-            tried = 0
-        if not out and stalled:
-            (topic, part), pos, end = stalled
-            raise RuntimeError(
-                f"fetch at {topic}/{part}:{pos} returned no messages "
-                f"but log end is {end} — message larger than fetch "
-                "max_bytes, or log truncated")
         return out
 
     def commit(self) -> None:
@@ -508,13 +413,6 @@ class KafkaEosRelay:
         self._tps = sorted((src_topic, p)
                            for p in meta.get(src_topic, []))
 
-    def _position(self, tp: tuple[str, int]) -> int:
-        committed = self._client.offset_fetch(self.group, *tp)
-        if committed >= 0:
-            return committed
-        time = EARLIEST if self._reset == "earliest" else LATEST
-        return self._client.list_offsets(tp[0], tp[1], time)
-
     def run_once(self, max_messages: int = 500) -> int:
         """ONE atomic cycle: poll ≤ ``max_messages`` across the source
         partitions (read_committed), transform, produce every
@@ -529,7 +427,8 @@ class KafkaEosRelay:
         for tp in self._tps:
             if budget <= 0:
                 break
-            pos = self._position(tp)
+            pos = _start_position(self._client, self.group, self._reset,
+                                  tp)
             recs, _hw, lso = self._client.fetch_records_meta(
                 tp[0], tp[1], pos, isolation="read_committed")
             if not recs:
@@ -550,7 +449,7 @@ class KafkaEosRelay:
                 out = self.transform(k, v)
                 if out is not None:
                     by_part.setdefault(part, []).append(
-                        (out[0], out[1], ts if ts is not None else 0))
+                        (out[0], out[1], ts))
             for part, msgs in by_part.items():
                 self._producer.send(self.dst_topic, part, msgs)
             self._producer.send_offsets_to_transaction(

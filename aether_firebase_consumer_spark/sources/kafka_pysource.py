@@ -13,13 +13,10 @@ Semantics mirror the JVM Kafka source where they overlap:
 * output schema ``key binary, value binary, topic string,
   partition int, offset bigint, timestamp timestamp,
   timestampType int`` — the JVM source's columns. Timestamps ride
-  magic-2 record batches (Fetch v4, negotiated via ApiVersions);
-  against a v0-only broker the fetch falls back to magic-0 message
-  sets and the column degrades to null with ``timestampType = -1``
-  (NoTimestampType). ``timestampType`` is 0 (CreateTime) for
-  timestamped rows — the mini broker stamps v0-produced messages
-  with append time but serves every batch as CreateTime; per-topic
-  LogAppendTime marking is a real-broker concern,
+  magic-2 record batches (Fetch v4), so every row carries one;
+  ``timestampType`` is 0 (CreateTime) — the mini broker serves every
+  batch as CreateTime, and per-topic LogAppendTime marking is a
+  real-broker concern,
 * options: ``bootstrap`` (host:port), ``securityProtocol``
   (PLAINTEXT | SASL_PLAINTEXT | SSL | SASL_SSL, with
   ``saslUsername``/``saslPassword`` and optional ``sslCaFile`` pinned
@@ -36,8 +33,7 @@ Semantics mirror the JVM Kafka source where they overlap:
   ``includeHeaders`` (adds the JVM source's
   ``headers array<struct<key,value>>`` column — KIP-82 record
   headers, read and written end to end; the sink accepts the same
-  column and forces record batches when headers are present since
-  magic-0 cannot carry them), and on the sink
+  column), and on the sink
   ``transactionalIdPrefix`` (the exactly-once tier: per-task
   transactions, driver-finalized — see :class:`KafkaPyWriter`),
 * streaming offsets are per-(topic, partition) log positions,
@@ -61,7 +57,6 @@ from __future__ import annotations
 
 import datetime
 import re
-import time
 import zlib
 from typing import Iterator, Optional
 
@@ -76,7 +71,6 @@ from pyspark.sql.datasource import (
 )
 
 from aether_firebase_consumer_spark.sources.kafka_wire import (
-    API_FETCH,
     EARLIEST,
     LATEST,
     KafkaWireClient,
@@ -99,12 +93,10 @@ def _include_headers(options: dict) -> bool:
 _EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 
-def _ms_to_dt(ts_ms: Optional[int]) -> Optional[datetime.datetime]:
+def _ms_to_dt(ts_ms: int) -> datetime.datetime:
     # timedelta arithmetic is exact at ms precision (float
     # fromtimestamp is not); aware UTC datetimes convert to Spark
     # TimestampType unambiguously
-    if ts_ms is None:
-        return None
     return _EPOCH + datetime.timedelta(milliseconds=ts_ms)
 
 
@@ -194,30 +186,15 @@ def _read_range(p: KafkaRangePartition) -> Iterator[tuple]:
                          **_security_kwargs(p.security)) as client:
         offset = p.start
         while offset < p.end:
-            want_headers = getattr(p, "include_headers", False)
-            iso = getattr(p, "isolation", "read_uncommitted")
-            if want_headers and client._max_version(API_FETCH) >= 4:
-                batch, _hw, _lso = client.fetch_records_meta(
-                    p.topic, p.partition, offset, isolation=iso,
-                    include_headers=True)
-            else:
-                # v0-only broker: magic-0 carries no headers — the
-                # column degrades to an empty list, like timestamp
-                # degrades to null
-                batch = [rec + ((),) if want_headers else rec
-                         for rec in client.fetch_records(
-                             p.topic, p.partition, offset,
-                             isolation=iso)]
+            batch, _hw, _lso = client.fetch_records_meta(
+                p.topic, p.partition, offset, isolation=p.isolation,
+                include_headers=p.include_headers)
             if not batch:
-                if client._max_version(API_FETCH) >= 4:
-                    # a v4 fetch returns at least the first record
-                    # when one exists (KIP-74 shape) — empty means the
-                    # remaining span holds only transaction control
-                    # markers or compaction ghosts, no records at all
-                    break
-                raise RuntimeError(
-                    f"fetch at {p.topic}/{p.partition}:{offset} returned "
-                    f"nothing but range end is {p.end} — log truncated?")
+                # a v4 fetch returns at least the first record when one
+                # exists (KIP-74) — empty means the rest of the range
+                # holds only transaction control markers, compaction
+                # gaps or (read_committed) aborted records
+                break
             for rec in batch:
                 off, ts, key, value = rec[:4]
                 if off >= p.end:
@@ -225,8 +202,8 @@ def _read_range(p: KafkaRangePartition) -> Iterator[tuple]:
                 if off < offset:
                     continue
                 row = (key, value, p.topic, p.partition, off,
-                       _ms_to_dt(ts), 0 if ts is not None else -1)
-                if want_headers:
+                       _ms_to_dt(ts), 0)
+                if p.include_headers:
                     row += (list(rec[4]),)
                 yield row
             offset = max(offset + 1, batch[-1][0] + 1)
@@ -556,16 +533,18 @@ class KafkaPyWriter(DataSourceWriter, DataSourceStreamWriter):
 
     Input columns: ``value`` (binary or string, required), optional
     ``key`` (binary or string), optional ``partition`` (int), optional
-    ``timestamp`` (timestamp or epoch-ms long → Produce v3 record
-    batches with producer CreateTime). Without
+    ``timestamp`` (timestamp or epoch-ms long, the record's producer
+    CreateTime; rows without one are stamped at produce time) and
+    optional ``headers``. Without
     a ``partition`` column rows route by ``crc32(key) % n_partitions``
     — a process-independent stand-in for the default partitioner's
     murmur2 (Python's own ``hash()`` is seed-randomized per process
     and would scatter one key across partitions between executors);
-    keyless rows go round-robin within the task. Delivery is AT-LEAST-ONCE, same as the JVM
-    Kafka sink: a task retry re-produces its rows — v0 has no
-    transactional produce, so exactly-once needs an idempotent
-    consumer downstream (which the pipeline's MERGE sink is).
+    keyless rows go round-robin within the task. Without
+    ``transactionalIdPrefix`` delivery is AT-LEAST-ONCE, same as the
+    JVM Kafka sink: a task retry re-produces its rows, so exactly-once
+    needs an idempotent consumer downstream (which the pipeline's
+    MERGE sink is).
 
     Each task opens one socket and produces in 500-message chunks — a
     produce-request sizing choice (the reference's Firestore
@@ -628,28 +607,10 @@ class KafkaPyWriter(DataSourceWriter, DataSourceStreamWriter):
             def flush(p: int) -> None:
                 if not buf.get(p):
                     return
-                if producer is not None:
-                    # transactional batches are always magic-2; rows
-                    # without a timestamp get stamped now
-                    now = int(time.time() * 1000)
-                    producer.send(
-                        self.topic, p,
-                        [(k, v, ts if ts is not None else now, h)
-                         for k, v, ts, h in buf[p]])
-                elif any(ts is not None or h for _, _, ts, h
-                         in buf[p]):
-                    # rows carry producer timestamps or headers →
-                    # Produce v3 (record batch — magic-0 can express
-                    # neither); rows without a timestamp in the same
-                    # chunk get stamped now
-                    now = int(time.time() * 1000)
-                    client.produce_records(
-                        self.topic, p,
-                        [(k, v, ts if ts is not None else now, h)
-                         for k, v, ts, h in buf[p]])
-                else:
-                    client.produce(self.topic, p,
-                                   [(k, v) for k, v, _, _ in buf[p]])
+                # rows without a timestamp are stamped at produce time
+                send = (producer.send if producer is not None
+                        else client.produce_records)
+                send(self.topic, p, buf[p])
                 counts[p] = counts.get(p, 0) + len(buf[p])
                 buf[p] = []
 
@@ -704,7 +665,7 @@ class KafkaPyWriter(DataSourceWriter, DataSourceStreamWriter):
 
     def commit(self, messages, batchId: int | None = None) -> None:
         # transactional mode: all tasks succeeded — make every task's
-        # writes visible to read_committed consumers. Plain mode: v0
+        # writes visible to read_committed consumers. Plain mode:
         # produce is unconditional; nothing to finalize.
         self._end_all(messages, commit=True)
 

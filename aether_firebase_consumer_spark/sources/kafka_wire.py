@@ -4,15 +4,14 @@ The image has neither a Kafka broker nor the spark-sql-kafka jar, so
 the reference's actual input path (a consumer poll loop,
 ``firebase/app/artifacts.py:263-285``) has never been exercisable
 end-to-end. This module closes that gap from first principles: it
-implements the PUBLIC Kafka wire protocol (kafka.apache.org/protocol —
-the v0 APIs with magic-0 message sets) in stdlib Python, giving
+implements the PUBLIC Kafka wire protocol (kafka.apache.org/protocol)
+in stdlib Python, giving
 
-* :class:`KafkaWireClient` — a minimal socket client speaking
-  Metadata / Produce / Fetch / ListOffsets v0, usable from Spark
-  executors (each partition reader opens its own connection), and
+* :class:`KafkaWireClient` — a minimal socket client, usable from
+  Spark executors (each partition reader opens its own connection), and
 * :class:`MiniKafkaBroker` — an in-memory, thread-per-connection
-  broker serving the same four APIs, so tests and the registered
-  queries can run a REAL produce→fetch round trip over TCP.
+  broker serving the same APIs, so tests and the registered queries
+  can run a REAL produce→fetch round trip over TCP.
 
 ``sources/kafka_pysource.py`` builds a PySpark DataSource (batch +
 streaming) on top of this client; together they are the jar-free
@@ -21,16 +20,23 @@ remains the production path (``readers.kafka_source_options``
 assembles its options) — this module is the proof-of-semantics and
 the no-jar escape hatch, exactly like ``avro_codec`` is for Avro.
 
-Beyond the v0 core, the broker/client pair speaks the later protocol
-pieces a production deployment leans on, all from the public spec:
-magic-2 record batches (Produce v3 / Fetch v4, CRC32C, per-record
-timestamps, gzip/Snappy/LZ4/zstd codecs — the last three on
-pyarrow's C codecs), consumer-group membership
+The data plane speaks ONE dialect: magic-2 RECORD BATCHES (CRC32C
+over the batch, zigzag-varint records, per-record timestamps and
+KIP-82 headers — kafka.apache.org/documentation#recordbatch) through
+Produce v3 / Fetch v4, plus ListOffsets v1 (offsets by position or by
+timestamp). Kafka 4.0 itself dropped the older magic-0/1 message sets
+(KIP-724) and the Produce v0-v2 / Fetch v0-v3 APIs that carried them
+(KIP-896); a broker that does not serve these versions closes the
+connection rather than answering in another format. Around that core
+the pair speaks the protocol pieces a production deployment leans on,
+all from the public spec: gzip/Snappy/LZ4/zstd batch codecs (the last
+three on pyarrow's C codecs), consumer-group membership
 (JoinGroup/SyncGroup/Heartbeat/LeaveGroup with negotiated protocols,
-KIP-345 static membership via JoinGroup v5), KIP-98 idempotent
-produce (InitProducerId + sequence fencing), and secured listeners
-(SASL/PLAIN over the framed SaslHandshake v1 / SaslAuthenticate flow,
-TLS or SASL_SSL via stdlib ``ssl``).
+KIP-345 static membership via JoinGroup v5 — the one API whose version
+the client picks from ApiVersions), KIP-98 idempotent and
+transactional produce, and secured listeners (SASL/PLAIN over the
+framed SaslHandshake v1 / SaslAuthenticate flow, TLS or SASL_SSL via
+stdlib ``ssl``).
 
 Wire format notes:
   request  = int32 size ++ int16 api_key ++ int16 api_version ++
@@ -39,25 +45,9 @@ Wire format notes:
   STRING   = int16 len (-1 null) ++ utf8 bytes
   BYTES    = int32 len (-1 null) ++ bytes
   ARRAY    = int32 count ++ items
-  message  = int32 crc32(magic..end) ++ int8 magic=0 ++ int8 attrs=0
-             ++ BYTES key ++ BYTES value
-  message set = repeat(int64 offset ++ int32 size ++ message)
-
-Two wire dialects are spoken, negotiated via ApiVersions exactly like
-a real client (``KafkaWireClient`` caches the broker's advertised
-ranges and picks the highest it knows):
-
-* the v0 APIs with magic-0 message sets (above) — the simplest stable
-  dialect, kept for compatibility and as the fallback, and
-* the modern record-batch dialect: Produce v3 / Fetch v4 with MAGIC-2
-  RECORD BATCHES (CRC32C over the batch, zigzag-varint records,
-  per-record TIMESTAMPS and headers — kafka.apache.org/documentation
-  #recordbatch) plus ListOffsets v1 (timestamp→offset lookup), which
-  is what lets ``kafka_py`` surface the JVM source's ``timestamp``
-  column.
 
 Consumer GROUPS: OffsetCommit/OffsetFetch v0 persist positions, and
-the full v0 membership protocol — FindCoordinator, JoinGroup,
+the full membership protocol — FindCoordinator, JoinGroup,
 SyncGroup, Heartbeat, LeaveGroup — runs broker-side rebalancing: the
 broker elects the first-sorted member leader, the leader computes the
 (client-side, range) assignment from every member's subscription, and
@@ -75,7 +65,7 @@ import struct
 import threading
 import time as _time
 import zlib
-from typing import Iterable, Optional
+from typing import Optional
 
 API_PRODUCE = 0
 API_FETCH = 1
@@ -191,68 +181,6 @@ class _Reader:
 
     def remaining(self) -> int:
         return len(self.data) - self.pos
-
-
-# ---------------------------------------------------------------------------
-# message sets (magic 0)
-# ---------------------------------------------------------------------------
-
-def encode_message(key: Optional[bytes], value: Optional[bytes]) -> bytes:
-    """One magic-0 message: crc ++ magic ++ attrs ++ key ++ value."""
-    body = _Writer()
-    body.i8(0)            # magic
-    body.i8(0)            # attributes (no compression)
-    body.bytes_(key)
-    body.bytes_(value)
-    crc = zlib.crc32(bytes(body.buf)) & 0xFFFFFFFF
-    out = _Writer()
-    out.buf += struct.pack(">I", crc)
-    out.raw(bytes(body.buf))
-    return bytes(out.buf)
-
-
-def encode_message_set(
-        entries: Iterable[tuple[int, Optional[bytes], Optional[bytes]]]
-) -> bytes:
-    """(offset, key, value)* → wire message set."""
-    w = _Writer()
-    for offset, key, value in entries:
-        msg = encode_message(key, value)
-        w.i64(offset)
-        w.i32(len(msg))
-        w.raw(msg)
-    return bytes(w.buf)
-
-
-def decode_message_set(data: bytes, *, validate_crc: bool = True
-                       ) -> list[tuple[int, Optional[bytes], Optional[bytes]]]:
-    """Wire message set → [(offset, key, value)]. A trailing partial
-    message (legal in Kafka fetch responses when max_bytes truncates)
-    is silently dropped, mirroring consumer behavior."""
-    out: list[tuple[int, Optional[bytes], Optional[bytes]]] = []
-    r = _Reader(data)
-    while r.remaining() >= 12:
-        offset = r.i64()
-        size = r.i32()
-        if size <= 0:
-            raise ValueError(
-                f"message at offset {offset}: non-positive size {size}")
-        if r.remaining() < size:
-            break  # partial trailing message
-        msg = r._take(size)
-        mr = _Reader(msg)
-        crc = struct.unpack(">I", mr._take(4))[0]
-        rest = msg[4:]
-        if validate_crc and (zlib.crc32(rest) & 0xFFFFFFFF) != crc:
-            raise ValueError(f"message at offset {offset}: CRC mismatch")
-        magic = mr.i8()
-        if magic != 0:
-            raise ValueError(f"unsupported message magic {magic}")
-        mr.i8()  # attributes
-        key = mr.bytes_()
-        value = mr.bytes_()
-        out.append((offset, key, value))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -517,17 +445,24 @@ def decode_record_batches(data: bytes, *, validate_crc: bool = True,
                           ) -> list[tuple]:
     """Concatenated magic-2 record batches → [(offset, timestamp_ms,
     key, value)] — or 5-tuples ending in a (key, value) header tuple
-    when ``with_headers`` (KIP-82 record headers; parsed either way,
-    surfaced on request so existing 4-tuple callers stay unchanged).
+    when ``with_headers`` (KIP-82 record headers, parsed only on
+    request so 4-tuple callers stay unchanged).
     A trailing partial batch (max_bytes truncation) is dropped,
-    mirroring consumer behavior."""
+    mirroring consumer behavior. A complete batch whose records do
+    not fit their section — fewer bytes than the record count needs,
+    or a record, key, value or header length running past its bounds
+    — raises ``ValueError``, even when its CRC checks out."""
     out: list[tuple] = []
     pos = 0
     while len(data) - pos >= 12:
         base_off, batch_len = struct.unpack_from(">qi", data, pos)
         end = pos + 12 + batch_len
-        if batch_len <= 0 or end > len(data):
+        if end > len(data):
             break  # partial trailing batch
+        if batch_len < 49:
+            raise ValueError(
+                f"record batch at offset {base_off} shorter than its "
+                "header")
         magic = data[pos + 16]
         if magic != 2:
             raise ValueError(f"unsupported record-batch magic {magic}")
@@ -546,38 +481,66 @@ def decode_record_batches(data: bytes, *, validate_crc: bool = True,
         recs = body[40:]
         if comp != CODEC_NONE:
             recs = decompress_records(comp, recs)
-        p = 0
-        for _ in range(count):
-            rec_len, p = _get_varint(recs, p)
-            rec_end = p + rec_len
-            p += 1  # record attributes
-            ts_delta, p = _get_varint(recs, p)
-            off_delta, p = _get_varint(recs, p)
-            klen, p = _get_varint(recs, p)
-            key = None if klen < 0 else bytes(recs[p:p + klen])
-            p += max(klen, 0)
-            vlen, p = _get_varint(recs, p)
-            value = None if vlen < 0 else bytes(recs[p:p + vlen])
-            p += max(vlen, 0)
-            if with_headers:
-                nh, p = _get_varint(recs, p)
-                hdrs = []
-                for _ in range(nh):
-                    hkl, p = _get_varint(recs, p)
-                    hk = bytes(recs[p:p + hkl]).decode("utf-8")
-                    p += hkl
-                    hvl, p = _get_varint(recs, p)
-                    hv = None if hvl < 0 else bytes(recs[p:p + hvl])
-                    p += max(hvl, 0)
-                    hdrs.append((hk, hv))
-                out.append((base_off + off_delta, base_ts + ts_delta,
-                            key, value, tuple(hdrs)))
-            else:
-                out.append((base_off + off_delta, base_ts + ts_delta,
-                            key, value))
-            p = rec_end  # headers skipped unless requested
+        try:
+            _decode_records(recs, count, base_off, base_ts,
+                            with_headers, out)
+        except IndexError:       # a varint ran off the section's end
+            raise ValueError(
+                f"record batch at offset {base_off}: records section "
+                f"too short for {count} records") from None
         pos = end
     return out
+
+
+def _decode_records(recs: bytes, count: int, base_off: int, base_ts: int,
+                    with_headers: bool, out: list) -> None:
+    """Append ``count`` records of one batch's records section to
+    ``out``; every length is checked against the record it sits in,
+    and every record against the section."""
+    n = len(recs)
+    p = 0
+    for i in range(count):
+        rec_len, p = _get_varint(recs, p)
+        rec_end = p + rec_len
+        if rec_len < 0 or rec_end > n:
+            raise ValueError(
+                f"record {i} of the batch at offset {base_off}: length "
+                f"{rec_len} runs past the records section")
+        p += 1  # record attributes
+        ts_delta, p = _get_varint(recs, p)
+        off_delta, p = _get_varint(recs, p)
+        klen, p = _get_varint(recs, p)
+        key = None if klen < 0 else bytes(recs[p:p + klen])
+        p += max(klen, 0)
+        vlen, p = _get_varint(recs, p)
+        value = None if vlen < 0 else bytes(recs[p:p + vlen])
+        p += max(vlen, 0)
+        if with_headers:
+            nh, p = _get_varint(recs, p)
+            hdrs = []
+            for _ in range(nh):
+                hkl, p = _get_varint(recs, p)
+                if hkl < 0:
+                    raise ValueError(
+                        f"record {i} of the batch at offset {base_off}: "
+                        "null header key")
+                hk = bytes(recs[p:p + hkl]).decode("utf-8")
+                p += hkl
+                hvl, p = _get_varint(recs, p)
+                hv = None if hvl < 0 else bytes(recs[p:p + hvl])
+                p += max(hvl, 0)
+                hdrs.append((hk, hv))
+            rec = (base_off + off_delta, base_ts + ts_delta, key, value,
+                   tuple(hdrs))
+        else:
+            rec = (base_off + off_delta, base_ts + ts_delta, key, value)
+        if p > rec_end:
+            raise ValueError(
+                f"record {i} of the batch at offset {base_off}: a key, "
+                f"value or header length runs past its {rec_len}-byte "
+                "record")
+        out.append(rec)
+        p = rec_end  # headers skipped unless requested
 
 
 # ---------------------------------------------------------------------------
@@ -670,7 +633,9 @@ def _recv_exact(sock: socket.socket, n: int) -> bytes:
 
 
 class KafkaWireClient:
-    """Minimal blocking Kafka client (v0 APIs). One TCP connection;
+    """Minimal blocking Kafka client (record batches via Produce v3 /
+    Fetch v4, ListOffsets v1, v0 group and offset APIs). One TCP
+    connection;
     NOT thread-safe — Spark partition readers each construct their
     own, which is exactly the consumer-per-task model."""
 
@@ -746,9 +711,11 @@ class KafkaWireClient:
 
     def _max_version(self, api_key: int) -> int:
         """Highest version the broker advertises for ``api_key`` (one
-        cached ApiVersions round trip — the negotiation every real
-        client does before its first request). A broker that cannot
-        answer ApiVersions at all is treated as v0-everything."""
+        cached ApiVersions round trip). Only JoinGroup picks its
+        version this way (v5 for static membership); every other API
+        is sent at the one version this client speaks, and a broker
+        that cannot answer ApiVersions at all is treated as
+        v0-everything."""
         if self._vers is None:
             try:
                 self._vers = self.api_versions()
@@ -786,44 +753,18 @@ class KafkaWireClient:
                 out[name] = sorted(parts)
         return out
 
-    def produce(self, topic: str, partition: int,
-                messages: list[tuple[Optional[bytes], Optional[bytes]]]
-                ) -> int:
-        """Append (key, value) messages; returns the base offset.
-        Broker stamps LogAppendTime timestamps (v0 carries none on the
-        wire); use :meth:`produce_records` to ship producer
-        CreateTime timestamps."""
-        mset = encode_message_set((0, k, v) for k, v in messages)
-        w = _Writer()
-        w.i16(1)      # acks
-        w.i32(10000)  # timeout
-        w.i32(1)      # one topic
-        w.string(topic)
-        w.i32(1)      # one partition
-        w.i32(partition)
-        w.i32(len(mset))
-        w.raw(mset)
-        r = self._call(API_PRODUCE, bytes(w.buf))
-        r.i32()       # topic count (1)
-        r.string()
-        r.i32()       # partition count (1)
-        r.i32()       # partition id
-        err = r.i16()
-        base = r.i64()
-        if err != ERR_NONE:
-            raise RuntimeError(f"produce failed: error {err}")
-        return base
-
     def produce_records(
-            self, topic: str, partition: int,
-            messages: list[tuple[Optional[bytes], Optional[bytes], int]],
+            self, topic: str, partition: int, messages: list[tuple],
             codec: Optional[str] = None,
             producer_id: int = -1, producer_epoch: int = -1,
             base_sequence: int = -1,
             transactional_id: Optional[str] = None) -> int:
-        """Append (key, value, timestamp_ms) via Produce v3 (magic-2
-        record batch, producer CreateTime timestamps); returns the
-        base offset. ``codec="gzip"``/``"snappy"``/``"lz4"``/``"zstd"`` ships the
+        """Append ``(key, value[, timestamp_ms[, headers]])`` messages
+        as one Produce v3 record batch; returns the base offset. A
+        missing or None timestamp is stamped with this client's clock
+        (producer CreateTime, as real producers do); ``headers`` is a
+        sequence of (str key, bytes|None value) pairs (KIP-82).
+        ``codec="gzip"``/``"snappy"``/``"lz4"``/``"zstd"`` ships the
         batch compressed. ``producer_id``/``producer_epoch``/
         ``base_sequence`` stamp the KIP-98 idempotence fields (see
         :class:`IdempotentProducer`); the broker then discards
@@ -831,16 +772,11 @@ class KafkaWireClient:
         ``transactional_id`` marks the batch transactional (attrs bit
         4) — it stays invisible to read_committed fetches until the
         producer's EndTxn writes the commit marker (see
-        :class:`TransactionalProducer`).
-        Requires a broker advertising Produce ≥ v3 — raises otherwise
-        rather than silently dropping timestamps."""
-        if self._max_version(API_PRODUCE) < 3:
-            raise RuntimeError(
-                "broker does not support Produce v3 (record batches); "
-                "use produce() for the magic-0 path")
+        :class:`TransactionalProducer`)."""
+        now = int(_time.time() * 1000)
         batch = encode_record_batch(
-            [(i, m[2], m[0], m[1]) + ((m[3],) if len(m) > 3 else ())
-             for i, m in enumerate(messages)],
+            [(i, now if len(m) < 3 or m[2] is None else m[2], m[0], m[1])
+             + tuple(m[3:4]) for i, m in enumerate(messages)],
             codec=codec, producer_id=producer_id,
             producer_epoch=producer_epoch, base_sequence=base_sequence,
             transactional=transactional_id is not None)
@@ -1013,56 +949,15 @@ class KafkaWireClient:
         r.i32()          # throttle_time_ms
         self._txn_err(r.i16(), "end_txn")
 
-    def fetch(self, topic: str, partition: int, offset: int,
-              max_bytes: int = 1 << 20
-              ) -> list[tuple[int, Optional[bytes], Optional[bytes]]]:
-        """Fetch from ``offset``; returns [(offset, key, value)]."""
-        w = _Writer()
-        w.i32(-1)     # replica_id
-        w.i32(0)      # max_wait_ms (broker answers immediately)
-        w.i32(0)      # min_bytes
-        w.i32(1)
-        w.string(topic)
-        w.i32(1)
-        w.i32(partition)
-        w.i64(offset)
-        w.i32(max_bytes)
-        r = self._call(API_FETCH, bytes(w.buf))
-        r.i32()       # topic count
-        r.string()
-        r.i32()       # partition count
-        r.i32()       # partition id
-        err = r.i16()
-        r.i64()       # high watermark
-        size = r.i32()
-        raw = r._take(size)
-        if err != ERR_NONE:
-            raise RuntimeError(f"fetch failed: error {err}")
-        return decode_message_set(raw)
-
     def fetch_records(self, topic: str, partition: int, offset: int,
                       max_bytes: int = 1 << 20,
                       isolation: str = "read_uncommitted"
-                      ) -> list[tuple[int, Optional[int],
-                                      Optional[bytes], Optional[bytes]]]:
-        """Fetch with timestamps: [(offset, timestamp_ms, key, value)].
-
-        Uses Fetch v4 (magic-2 record batches) when the broker
-        advertises it; falls back to v0 message sets with
-        ``timestamp=None`` (magic-0 carries no timestamp) — so callers
-        get one shape either way and the timestamp column degrades to
-        null instead of failing against an old broker.
-        ``isolation="read_committed"`` surfaces only records of
-        COMMITTED transactions below the last stable offset (requires
-        Fetch v4)."""
-        if self._max_version(API_FETCH) < 4:
-            if isolation == "read_committed":
-                raise RuntimeError(
-                    "read_committed requires Fetch v4 (isolation "
-                    "levels); this broker tops out below it")
-            return [(off, None, k, v)
-                    for off, k, v in self.fetch(topic, partition, offset,
-                                                max_bytes)]
+                      ) -> list[tuple[int, int, Optional[bytes],
+                                      Optional[bytes]]]:
+        """Fetch v4: [(offset, timestamp_ms, key, value)] from
+        ``offset``. ``isolation="read_committed"`` surfaces only
+        records of COMMITTED transactions below the last stable
+        offset."""
         recs, _hw, _lso = self.fetch_records_meta(
             topic, partition, offset, max_bytes, isolation)
         return recs
@@ -1073,17 +968,15 @@ class KafkaWireClient:
                            include_headers: bool = False
                            ) -> tuple[list[tuple], int, int]:
         """Fetch v4 returning (records, high_watermark,
-        last_stable_offset). A read_committed consumer needs the LSO
-        to advance past a span whose every record belonged to aborted
-        transactions (the fetch legitimately returns zero records
-        while the position is still behind the log end)."""
+        last_stable_offset). The first record at or after ``offset``
+        comes back whole even when it exceeds ``max_bytes`` (KIP-74),
+        so zero records with ``offset`` below the bound (the LSO for
+        read_committed, else the high watermark) means the span holds
+        no visible records at all — only transaction control markers,
+        compaction gaps or (read_committed) aborted records — and the
+        caller may skip to the bound."""
         if isolation not in ("read_uncommitted", "read_committed"):
             raise ValueError(f"unknown isolation level {isolation!r}")
-        if self._max_version(API_FETCH) < 4:
-            raise RuntimeError(
-                "fetch_records_meta requires Fetch v4 (record batches "
-                "+ isolation levels); this broker tops out below it — "
-                "use fetch()/fetch_records() for the v0 path")
         w = _Writer()
         w.i32(-1)            # replica_id
         w.i32(0)             # max_wait_ms
@@ -1122,49 +1015,35 @@ class KafkaWireClient:
 
     def list_offsets_bulk(self, topics: dict[str, list[int]], time: int
                           ) -> dict[tuple[str, int], int]:
-        """All requested (topic, partition) positions in ONE request —
-        the v0 wire format batches topics and partitions natively, so a
-        1000-partition subscription costs one round trip per offset
-        poll, not one per partition (the per-trigger driver cost that
-        actually matters at scale)."""
-        w = _Writer()
-        w.i32(-1)     # replica_id
-        w.i32(len(topics))
-        for topic, parts in topics.items():
-            w.string(topic)
-            w.i32(len(parts))
-            for p in parts:
-                w.i32(p)
-                w.i64(time)
-                w.i32(1)  # max offsets
-        r = self._call(API_LIST_OFFSETS, bytes(w.buf))
-        out: dict[tuple[str, int], int] = {}
-        for _ in range(r.i32()):
-            name = r.string() or ""
-            for _ in range(r.i32()):
-                pid = r.i32()
-                err = r.i16()
-                offs = [r.i64() for _ in range(r.i32())]
-                if err != ERR_NONE:
-                    raise RuntimeError(
-                        f"list_offsets {name}/{pid} failed: error {err}")
-                out[(name, pid)] = offs[0] if offs else 0
-        return out
+        """All requested (topic, partition) positions for ``time``
+        (EARLIEST, LATEST) in ONE request — ListOffsets batches topics
+        and partitions natively, so a 1000-partition subscription
+        costs one round trip per offset poll, not one per partition
+        (the per-trigger driver cost that actually matters at
+        scale)."""
+        got = self._list_offsets(
+            {(t, p): time for t, parts in topics.items() for p in parts})
+        return {tp: off for tp, (_ts, off) in got.items()}
 
     def offsets_for_times(self, targets: dict[tuple[str, int], int]
                           ) -> dict[tuple[str, int],
                                     Optional[tuple[int, int]]]:
-        """ListOffsets v1: (topic, partition) → timestamp_ms targets;
-        returns the (timestamp, offset) of the FIRST message at-or-
-        after each target, or None when no such message exists — the
+        """(topic, partition) → timestamp_ms targets; returns the
+        (timestamp, offset) of the FIRST message at-or-after each
+        target, or None when no such message exists — the
         ``startingOffsetsByTimestamp`` primitive. EARLIEST/LATEST
         sentinels also work (offset with timestamp -1)."""
-        if self._max_version(API_LIST_OFFSETS) < 1:
-            raise RuntimeError(
-                "broker does not support ListOffsets v1 "
-                "(timestamp lookup)")
+        return {tp: None if off < 0 else (ts, off)
+                for tp, (ts, off) in self._list_offsets(targets).items()}
+
+    def _list_offsets(self, targets: dict[tuple[str, int], int]
+                      ) -> dict[tuple[str, int], tuple[int, int]]:
+        """ListOffsets v1: (topic, partition) → target time (a
+        timestamp, EARLIEST or LATEST) in one request; returns
+        (timestamp, offset) per partition, offset -1 for a timestamp
+        past every record."""
         w = _Writer()
-        w.i32(-1)
+        w.i32(-1)     # replica_id
         by_topic: dict[str, list[tuple[int, int]]] = {}
         for (t, p), ts in targets.items():
             by_topic.setdefault(t, []).append((p, ts))
@@ -1176,7 +1055,7 @@ class KafkaWireClient:
                 w.i32(p)
                 w.i64(ts)
         r = self._call(API_LIST_OFFSETS, bytes(w.buf), version=1)
-        out: dict[tuple[str, int], Optional[tuple[int, int]]] = {}
+        out: dict[tuple[str, int], tuple[int, int]] = {}
         for _ in range(r.i32()):
             name = r.string() or ""
             for _ in range(r.i32()):
@@ -1186,8 +1065,8 @@ class KafkaWireClient:
                 off = r.i64()
                 if err != ERR_NONE:
                     raise RuntimeError(
-                        f"offsets_for_times {name}/{pid}: error {err}")
-                out[(name, pid)] = None if off < 0 else (ts, off)
+                        f"list_offsets {name}/{pid} failed: error {err}")
+                out[(name, pid)] = (ts, off)
         return out
 
     def offset_commit(self, group: str, topic: str, partition: int,
@@ -1371,8 +1250,7 @@ class KafkaWireClient:
 
     def api_versions(self) -> dict[int, tuple[int, int]]:
         """api_key → (min, max) supported versions — the negotiation
-        request real clients send first; everything this broker speaks
-        is v0."""
+        request real clients send first."""
         r = self._call(API_VERSIONS, b"")
         err = r.i16()
         if err != ERR_NONE:
@@ -1525,11 +1403,12 @@ class TransactionalProducer:
 # ---------------------------------------------------------------------------
 
 class MiniKafkaBroker:
-    """In-memory single-node broker for the four v0 APIs.
+    """In-memory single-node broker for the APIs in :attr:`SUPPORTED`.
 
     Topics auto-create on first produce (1 partition) or explicitly via
     :meth:`create_topic`. Message logs are per-(topic, partition) lists
-    of (offset, key, value) with a per-partition next-offset counter —
+    of (offset, timestamp_ms, key, value, headers) with a
+    per-partition next-offset counter —
     offsets are dense from 0 until :meth:`compact` runs, after which
     the log keeps only the LAST entry per key with its ORIGINAL offset
     (Kafka log compaction): consumers must tolerate offset gaps, and
@@ -1545,17 +1424,17 @@ class MiniKafkaBroker:
     rebalance_timeout: float = 5.0
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
-                 clock=None, fetch_codec: Optional[str] = None,
+                 fetch_codec: Optional[str] = None,
                  sasl_users: Optional[dict[str, str]] = None,
                  ssl_context=None,
                  state: Optional[dict] = None) -> None:
         #: (topic, partition) → list of (offset, timestamp_ms, key,
-        #: value), offsets strictly increasing (gaps after compaction).
-        #: v0 produces are stamped with ``clock`` (LogAppendTime);
-        #: v3 produces carry producer CreateTime timestamps.
+        #: value, headers), offsets strictly increasing (gaps after
+        #: compaction or transaction markers); timestamps are the
+        #: producer's CreateTime
         self._logs: dict[tuple[str, int],
                          list[tuple[int, int, Optional[bytes],
-                                    Optional[bytes]]]] = {}
+                                    Optional[bytes], tuple]]] = {}
         self._next: dict[tuple[str, int], int] = {}
         #: (group, topic, partition) → committed consumer offset
         self._group_offsets: dict[tuple[str, str, int], int] = {}
@@ -1587,8 +1466,6 @@ class MiniKafkaBroker:
         self._lock = threading.Lock()
         if state is not None:
             self._load_state(state)
-        #: injectable ms clock — tests pin deterministic timestamps
-        self._clock = clock or (lambda: int(_time.time() * 1000))
         #: compress v4 fetch responses ("gzip"/"snappy"/"lz4"/"zstd") — real brokers serve
         #: batches in the topic's codec; this exercises the client's
         #: compressed-decode path end-to-end
@@ -1754,9 +1631,9 @@ class MiniKafkaBroker:
     #: (api_key → (min, max)) — what ApiVersions advertises and what
     #: _dispatch accepts
     SUPPORTED: dict[int, tuple[int, int]] = {
-        API_PRODUCE: (0, 3),         # v3 = magic-2 record batches
-        API_FETCH: (0, 4),           # v4 = record batches + isolation
-        API_LIST_OFFSETS: (0, 1),    # v1 = timestamp→offset lookup
+        API_PRODUCE: (3, 3),         # magic-2 record batches
+        API_FETCH: (4, 4),           # record batches + isolation
+        API_LIST_OFFSETS: (1, 1),    # by position or by timestamp
         API_METADATA: (0, 0),
         API_OFFSET_COMMIT: (0, 0),
         API_OFFSET_FETCH: (0, 0),
@@ -1815,21 +1692,14 @@ class MiniKafkaBroker:
         if api_key == API_SASL_AUTHENTICATE:
             self._handle_sasl_authenticate(req, w, conn)
             return bytes(w.buf)
-        # intermediate versions this broker never emitted (e.g.
-        # Produce v1/v2, Fetch v1-v3) are not implemented — the
-        # paired client only negotiates v0 or the advertised max
         if api_key == API_METADATA:
             self._handle_metadata(req, w)
         elif api_key == API_PRODUCE:
-            if api_version not in (0, 3):
-                raise ValueError(f"produce v{api_version} unimplemented")
-            self._handle_produce(req, w, api_version)
+            self._handle_produce(req, w)
         elif api_key == API_FETCH:
-            if api_version not in (0, 4):
-                raise ValueError(f"fetch v{api_version} unimplemented")
-            self._handle_fetch(req, w, api_version)
+            self._handle_fetch(req, w)
         elif api_key == API_LIST_OFFSETS:
-            self._handle_list_offsets(req, w, api_version)
+            self._handle_list_offsets(req, w)
         elif api_key == API_OFFSET_COMMIT:
             self._handle_offset_commit(req, w)
         elif api_key == API_OFFSET_FETCH:
@@ -1838,6 +1708,8 @@ class MiniKafkaBroker:
             self._handle_find_coordinator(req, w)
         elif api_key == API_JOIN_GROUP:
             if api_version not in (0, 5):
+                # v1-v4 are advertised by the range but never sent by
+                # the paired client
                 raise ValueError(
                     f"join_group v{api_version} unimplemented")
             self._handle_join_group(req, w, client_id, api_version)
@@ -2083,14 +1955,10 @@ class MiniKafkaBroker:
                 w.i32(1); w.i32(0)  # replicas [0]
                 w.i32(1); w.i32(0)  # isr [0]
 
-    def _handle_produce(self, req: _Reader, w: _Writer,
-                        version: int) -> None:
-        txn_id = None
-        if version >= 3:
-            txn_id = req.string()   # transactional_id
+    def _handle_produce(self, req: _Reader, w: _Writer) -> None:
+        txn_id = req.string()   # transactional_id
         req.i16()  # acks
         req.i32()  # timeout
-        now = self._clock()
         results = []
         for _ in range(req.i32()):
             topic = req.string() or ""
@@ -2098,21 +1966,10 @@ class MiniKafkaBroker:
                 partition = req.i32()
                 size = req.i32()
                 mset = req._take(size)
-                pid = -1
-                epoch = -1
-                attrs = 0
-                if version >= 3:
-                    # magic-2 record batch with producer timestamps
-                    pid, epoch, base_seq, count, attrs = \
-                        peek_batch_producer(mset)
-                    msgs = [(ts, k, v, h) for _, ts, k, v, h
-                            in decode_record_batches(
-                                mset, with_headers=True)]
-                else:
-                    # magic-0: no wire timestamp → LogAppendTime;
-                    # the format carries no headers
-                    msgs = [(now, k, v, ()) for _, k, v
-                            in decode_message_set(mset)]
+                pid, epoch, base_seq, count, attrs = \
+                    peek_batch_producer(mset)
+                msgs = [(ts, k, v, h) for _, ts, k, v, h
+                        in decode_record_batches(mset, with_headers=True)]
                 with self._lock:
                     txn = None
                     if attrs & ATTR_TRANSACTIONAL:
@@ -2180,20 +2037,15 @@ class MiniKafkaBroker:
             w.i32(partition)
             w.i16(err)
             w.i64(base)
-            if version >= 3:
-                w.i64(-1)   # log_append_time (-1: CreateTime batch)
-        if version >= 3:
-            w.i32(0)        # throttle_time_ms
+            w.i64(-1)   # log_append_time (-1: CreateTime batch)
+        w.i32(0)        # throttle_time_ms
 
-    def _handle_fetch(self, req: _Reader, w: _Writer,
-                      version: int) -> None:
+    def _handle_fetch(self, req: _Reader, w: _Writer) -> None:
         req.i32()  # replica
         req.i32()  # max_wait
         req.i32()  # min_bytes
-        isolation = 0
-        if version >= 4:
-            req.i32()  # request-level max_bytes
-            isolation = req.i8()   # 0=read_uncommitted 1=read_committed
+        req.i32()  # request-level max_bytes
+        isolation = req.i8()   # 0=read_uncommitted 1=read_committed
         out = []
         for _ in range(req.i32()):
             topic = req.string() or ""
@@ -2225,7 +2077,9 @@ class MiniKafkaBroker:
                     entries = []
                     size = 0
                     # first entry with offset >= requested (offsets are
-                    # sorted; gaps possible after compaction/markers)
+                    # sorted; gaps possible after compaction/markers).
+                    # The first visible record always ships whole,
+                    # however large (KIP-74)
                     i = bisect.bisect_left(log, offset,
                                            key=lambda e: e[0])
                     for off, ts, k, v, h in log[i:]:
@@ -2233,21 +2087,13 @@ class MiniKafkaBroker:
                             break
                         if off in aborted:
                             continue
-                        size += (26 + len(k or b"") + len(v or b"")
-                                 if version >= 4
-                                 else 12 + len(encode_message(k, v)))
+                        size += 26 + len(k or b"") + len(v or b"")
                         if entries and size > max_bytes:
                             break
                         entries.append((off, ts, k, v, h))
-                if version >= 4:
-                    mset = encode_record_batch(entries,
-                                               codec=self._fetch_codec)
-                else:
-                    mset = encode_message_set(
-                        (off, k, v) for off, _ts, k, v, _h in entries)
+                mset = encode_record_batch(entries, codec=self._fetch_codec)
                 out.append((topic, partition, ERR_NONE, hw, lso, mset))
-        if version >= 4:
-            w.i32(0)   # throttle_time_ms
+        w.i32(0)   # throttle_time_ms
         w.i32(len(out))
         for topic, partition, err, hw, lso, mset in out:
             w.string(topic)
@@ -2255,14 +2101,12 @@ class MiniKafkaBroker:
             w.i32(partition)
             w.i16(err)
             w.i64(hw)
-            if version >= 4:
-                w.i64(lso)  # last_stable_offset
-                w.i32(0)    # aborted_transactions (broker-filtered)
+            w.i64(lso)  # last_stable_offset
+            w.i32(0)    # aborted_transactions (broker-filtered)
             w.i32(len(mset))
             w.raw(mset)
 
-    def _handle_list_offsets(self, req: _Reader, w: _Writer,
-                             version: int) -> None:
+    def _handle_list_offsets(self, req: _Reader, w: _Writer) -> None:
         req.i32()  # replica
         out = []
         for _ in range(req.i32()):
@@ -2270,43 +2114,30 @@ class MiniKafkaBroker:
             for _ in range(req.i32()):
                 partition = req.i32()
                 time = req.i64()
-                if version == 0:
-                    req.i32()  # max offsets (v0 only)
                 with self._lock:
                     log = self._logs.get((topic, partition))
                     end = self._next.get((topic, partition), 0)
                 if log is None:
                     out.append((topic, partition,
-                                ERR_UNKNOWN_TOPIC_OR_PARTITION, -1, []))
+                                ERR_UNKNOWN_TOPIC_OR_PARTITION, -1, -1))
                 elif time == EARLIEST:
                     first = log[0][0] if log else end
-                    out.append((topic, partition, ERR_NONE, -1, [first]))
+                    out.append((topic, partition, ERR_NONE, -1, first))
                 elif time == LATEST:
-                    out.append((topic, partition, ERR_NONE, -1, [end]))
-                elif version >= 1:
-                    # v1: first message with timestamp >= target
-                    hit = next(((ts, off) for off, ts, *_ in log
-                                if ts >= time), None)
-                    if hit is None:
-                        out.append((topic, partition, ERR_NONE, -1, []))
-                    else:
-                        out.append((topic, partition, ERR_NONE,
-                                    hit[0], [hit[1]]))
-                else:  # v0 has no timestamp index → log end
-                    out.append((topic, partition, ERR_NONE, -1, [end]))
+                    out.append((topic, partition, ERR_NONE, -1, end))
+                else:
+                    # first message with timestamp >= target (-1: none)
+                    ts, off = next(((ts, off) for off, ts, *_ in log
+                                    if ts >= time), (-1, -1))
+                    out.append((topic, partition, ERR_NONE, ts, off))
         w.i32(len(out))
-        for topic, partition, err, ts, offs in out:
+        for topic, partition, err, ts, off in out:
             w.string(topic)
             w.i32(1)
             w.i32(partition)
             w.i16(err)
-            if version >= 1:
-                w.i64(ts)
-                w.i64(offs[0] if offs else -1)
-            else:
-                w.i32(len(offs))
-                for o in offs:
-                    w.i64(o)
+            w.i64(ts)
+            w.i64(off)
 
     def _handle_offset_commit(self, req: _Reader, w: _Writer) -> None:
         group = req.string() or ""

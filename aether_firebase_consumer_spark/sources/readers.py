@@ -165,8 +165,7 @@ def stream_kafka_source(spark: SparkSession, bootstrap: str,
     ``use_wire_fallback`` is set, the jar-free ``kafka_py`` source
     (``sources/kafka_pysource.py``: pure-Python wire protocol, same
     output schema including the timestamp columns — magic-2 record
-    batches via Fetch v4, null timestamps against a v0-only broker)
-    serves the stream
+    batches via Fetch v4) serves the stream
     instead, so the poll loop works either way. ``security`` options
     have no fallback equivalent (the wire client speaks PLAINTEXT
     only) — with security configured, jar absence stays an error."""

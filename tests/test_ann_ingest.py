@@ -371,7 +371,7 @@ def test_ann_ingest_from_kafka_stream(spark, tmp_path):
     with MiniKafkaBroker() as broker:
         def produce(rows):
             with KafkaWireClient(broker.host, broker.port) as c:
-                c.produce("vecs.ann", 0, [
+                c.produce_records("vecs.ann", 0, [
                     (str(i).encode(),
                      json.dumps({"vec_id": i, "embedding": v}).encode())
                     for i, v in rows])

@@ -128,7 +128,7 @@ def test_kafka_compacted_topic_takedown_e2e(spark, tmp_path):
             """entries: (id, vec|None) — key carries the id so
             tombstones (null value) stay addressable."""
             with KafkaWireClient(broker.host, broker.port) as c:
-                c.produce("vecs.cdc", 0, [
+                c.produce_records("vecs.cdc", 0, [
                     (str(i).encode(),
                      None if v is None else
                      json.dumps({"embedding": v}).encode())

@@ -93,7 +93,7 @@ def test_dedup_ingest_from_kafka_stream(spark, tmp_path):
     with MiniKafkaBroker() as broker:
         def produce(rows):
             with KafkaWireClient(broker.host, broker.port) as c:
-                c.produce("docs.in", 0, [
+                c.produce_records("docs.in", 0, [
                     (str(i).encode(),
                      json.dumps({"doc_id": i, "text": t}).encode())
                     for i, t in rows])

@@ -324,7 +324,7 @@ def test_pruned_index_job_from_kafka_stream(spark, tmp_path):
     with MiniKafkaBroker() as broker:
         def produce(rows):
             with KafkaWireClient(broker.host, broker.port) as c:
-                c.produce("docs.pr", 0, [
+                c.produce_records("docs.pr", 0, [
                     (str(i).encode(),
                      json.dumps({"doc_id": i, "text": t}).encode())
                     for i, t in rows])

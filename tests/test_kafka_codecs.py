@@ -74,16 +74,17 @@ def test_record_batch_round_trip(codec):
 @pytest.mark.parametrize("codec", ["snappy", "lz4", "zstd"])
 def test_broker_round_trip(codec):
     """Produce compressed → broker decodes → fetch responses re-encoded
-    in ``fetch_codec`` → client decodes; v0 produce interop too."""
-    with MiniKafkaBroker(clock=lambda: 1, fetch_codec=codec) as b:
+    in ``fetch_codec`` → client decodes; an uncompressed produce into
+    the same log too."""
+    with MiniKafkaBroker(fetch_codec=codec) as b:
         with KafkaWireClient(b.host, b.port) as c:
             c.produce_records("c.t", 0,
                               [(b"a", b"x" * 1000, 11),
                                (b"b", b"y" * 1000, 22)], codec=codec)
-            c.produce("c.t", 0, [(b"c", b"z")])
+            c.produce_records("c.t", 0, [(b"c", b"z", 33)])
             got = c.fetch_records("c.t", 0, 0)
     assert got == [(0, 11, b"a", b"x" * 1000), (1, 22, b"b", b"y" * 1000),
-                   (2, 1, b"c", b"z")]
+                   (2, 33, b"c", b"z")]
 
 
 @pytest.mark.parametrize("codec", CODECS)
@@ -321,3 +322,32 @@ def test_corrupt_payload_raises_value_error(codec, bad):
     plain, _ = _plain_records()
     with pytest.raises(ValueError, match=f"{codec} record-batch payload"):
         decode_record_batches(_with_records(plain, IDS[codec], bad))
+
+
+# ------------------------------------------- malformed records sections
+
+_ONE = encode_record_batch([(0, 100, b"k", b"value-123")])
+
+
+@pytest.mark.parametrize("batch,with_headers", [
+    # the header counts 3 records; the section holds only the first
+    (_with_records(encode_record_batch(ENTRIES), 0,
+                   encode_record_batch(ENTRIES[:1])[61:]), False),
+    # the section ends 3 bytes short of its one record's length, which
+    # would otherwise decode as b"value-1"
+    (_with_records(_ONE, 0, _ONE[61:-3]), False),
+    # value length 20 inside an 11-byte record
+    (_with_records(_ONE, 0, b"\x16\x00\x00\x00\x01\x28abcde\x00"), False),
+    # header key length 20 inside a 9-byte record
+    (_with_records(_ONE, 0, b"\x12\x00\x00\x00\x01\x01\x02\x28ab"), True),
+    # a batchLength of -5 between two whole batches, which would
+    # otherwise end the decode and drop the batch after it
+    (_ONE + _ONE[:8] + struct.pack(">i", -5) + _ONE[12:] + _ONE, False),
+], ids=["short-records", "truncated-value", "value-past-record",
+        "header-past-record", "negative-batch-length"])
+def test_malformed_records_section_raises_value_error(batch, with_headers):
+    """A batch whose CRC checks out but whose records do not fit their
+    section raises ValueError rather than IndexError or a silently
+    truncated value."""
+    with pytest.raises(ValueError, match="record"):
+        decode_record_batches(batch, with_headers=with_headers)

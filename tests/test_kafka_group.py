@@ -1,4 +1,4 @@
-"""Magic-2 record batches, timestamp surfaces, and the consumer-group
+"""Timestamp surfaces of ``kafka_py`` and the consumer-group
 rebalance protocol (JoinGroup/SyncGroup/Heartbeat/LeaveGroup) — the
 round-6 close of O19: the reference's consumers share a group and let
 the BROKER split partitions across instances
@@ -16,18 +16,15 @@ from aether_firebase_consumer_spark.sources.kafka_consumer import (
     GroupConsumer,
 )
 from aether_firebase_consumer_spark.sources.kafka_wire import (
-    EARLIEST,
     KafkaWireClient,
     MiniKafkaBroker,
-    decode_record_batches,
-    encode_record_batch,
     range_assignment,
 )
 
 
 @pytest.fixture()
 def broker():
-    with MiniKafkaBroker(clock=lambda: 1_700_000_000_000) as b:
+    with MiniKafkaBroker() as b:
         # generous rebalance window: under a loaded box (the full gate
         # runs Spark + bench on all 32 threads) a member's SyncGroup
         # can miss a 2 s window, leaving it unassigned and flaking the
@@ -41,95 +38,6 @@ def broker():
 
 def _client(broker):
     return KafkaWireClient(broker.host, broker.port)
-
-
-# ------------------------------------------------------- record batch codec
-
-def test_record_batch_roundtrip_with_gaps_and_nulls():
-    entries = [(5, 1000, b"k0", b"v0"),
-               (6, 1010, None, b"v1"),
-               (9, 990, b"k2", None)]   # offset gap + ts below base
-    assert decode_record_batches(encode_record_batch(entries)) == entries
-
-
-def test_record_batch_concatenated_and_partial_trailing():
-    b1 = encode_record_batch([(0, 100, b"a", b"x")])
-    b2 = encode_record_batch([(1, 200, b"b", b"y")])
-    both = decode_record_batches(b1 + b2)
-    assert both == [(0, 100, b"a", b"x"), (1, 200, b"b", b"y")]
-    # max_bytes truncation mid-batch: the partial batch is dropped
-    assert decode_record_batches(b1 + b2[:-3]) == [(0, 100, b"a", b"x")]
-
-
-def test_record_batch_crc32c_validated():
-    data = bytearray(encode_record_batch([(0, 100, b"k", b"value")]))
-    data[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC32C"):
-        decode_record_batches(bytes(data))
-
-
-def test_crc32c_known_vector():
-    # the standard check value for CRC-32C: crc("123456789")
-    from aether_firebase_consumer_spark.sources.kafka_wire import crc32c
-    assert crc32c(b"123456789") == 0xE3069283
-
-
-# --------------------------------------------------- timestamps on the wire
-
-def test_produce_records_fetch_records_roundtrip(broker):
-    """Producer CreateTime timestamps survive produce v3 → fetch v4."""
-    with _client(broker) as c:
-        base = c.produce_records(
-            "ts.t", 0, [(b"k1", b"v1", 1111), (None, b"v2", 2222)])
-        assert base == 0
-        got = c.fetch_records("ts.t", 0, 0)
-    assert got == [(0, 1111, b"k1", b"v1"), (1, 2222, None, b"v2")]
-
-
-def test_v0_produce_gets_log_append_timestamp(broker):
-    """Magic-0 produces carry no timestamp; the broker stamps append
-    time (the injected clock), and fetch_records surfaces it."""
-    with _client(broker) as c:
-        c.produce("ts.v0", 0, [(b"k", b"v")])
-        got = c.fetch_records("ts.v0", 0, 0)
-    assert got == [(0, 1_700_000_000_000, b"k", b"v")]
-
-
-def test_mixed_dialect_interop(broker):
-    """v0 and v3 produces into one partition; both v0 fetch (no ts)
-    and v4 fetch (with ts) read the whole log."""
-    with _client(broker) as c:
-        c.produce("ts.mix", 0, [(b"a", b"1")])
-        c.produce_records("ts.mix", 0, [(b"b", b"2", 42)])
-        v0 = c.fetch("ts.mix", 0, 0)
-        v4 = c.fetch_records("ts.mix", 0, 0)
-    assert v0 == [(0, b"a", b"1"), (1, b"b", b"2")]
-    assert v4 == [(0, 1_700_000_000_000, b"a", b"1"), (1, 42, b"b", b"2")]
-
-
-def test_offsets_for_times(broker):
-    with _client(broker) as c:
-        c.produce_records("ts.lookup", 0,
-                          [(None, b"a", 100), (None, b"b", 200),
-                           (None, b"c", 300)])
-        hits = c.offsets_for_times({("ts.lookup", 0): 150})
-        assert hits[("ts.lookup", 0)] == (200, 1)
-        # beyond the last timestamp → no offset
-        assert c.offsets_for_times({("ts.lookup", 0): 999})[
-            ("ts.lookup", 0)] is None
-        # sentinel EARLIEST still works through v1
-        assert c.offsets_for_times({("ts.lookup", 0): EARLIEST})[
-            ("ts.lookup", 0)][1] == 0
-
-
-def test_compaction_preserves_timestamps_and_v4_gap_offsets(broker):
-    """Post-compaction offset gaps ride record-batch deltas."""
-    with _client(broker) as c:
-        c.produce_records("ts.c", 0, [(b"A", b"a1", 10), (b"B", b"b1", 20),
-                                      (b"A", b"a2", 30)])
-        broker.compact("ts.c")
-        got = c.fetch_records("ts.c", 0, 0)
-    assert got == [(1, 20, b"B", b"b1"), (2, 30, b"A", b"a2")]
 
 
 # ------------------------------------------------------------ range assignor
@@ -151,9 +59,9 @@ def _seed(broker, topic: str, parts: int, per_part: int) -> None:
     broker.create_topic(topic, partitions=parts)
     with _client(broker) as c:
         for p in range(parts):
-            c.produce(topic, p,
-                      [(None, f"{topic}-{p}-{i}".encode())
-                       for i in range(per_part)])
+            c.produce_records(topic, p,
+                              [(None, f"{topic}-{p}-{i}".encode())
+                               for i in range(per_part)])
 
 
 # JoinGroup BLOCKS until the whole generation gathers — so each group
@@ -336,14 +244,14 @@ def _register(spark):
 
 def test_kafka_py_surfaces_timestamp_column(spark, broker):
     """The JVM source's timestamp/timestampType columns, served from
-    magic-2 record batches: producer CreateTime for v3 produces,
-    broker append time (the injected clock) for v0 produces."""
+    magic-2 record batches: each record's producer CreateTime, with
+    timestampType 0 (CreateTime)."""
     import datetime as dt
 
     _register(spark)
     with _client(broker) as c:
         c.produce_records("spark.ts", 0, [(b"k1", b"v1", 1_600_000_000_000)])
-        c.produce("spark.ts", 0, [(b"k2", b"v2")])   # broker-stamped
+        c.produce_records("spark.ts", 0, [(b"k2", b"v2", 1_700_000_000_000)])
     df = (spark.read.format("kafka_py")
           .option("bootstrap", broker.bootstrap)
           .option("subscribe", "spark.ts").load())
@@ -361,7 +269,7 @@ def test_kafka_py_surfaces_timestamp_column(spark, broker):
     assert got0 is not None and rows[0].timestampType == 0
     assert int(as_utc(got0).timestamp() * 1000) in (1_600_000_000_000,)
     assert int(as_utc(rows[1].timestamp).timestamp() * 1000) \
-        == 1_700_000_000_000
+        == 1_700_000_000_000 and rows[1].timestampType == 0
 
 
 def test_kafka_py_sink_timestamp_column_roundtrip(spark, broker):
@@ -468,49 +376,6 @@ def test_background_heartbeat_survives_slow_processing(broker):
         assert lazy.generation > gen
     finally:
         lazy.close()
-
-
-def test_gzip_record_batches_end_to_end():
-    """Compressed record batches (codec bits per the public spec):
-    gzip produce → broker decode → gzip fetch responses → client
-    decode; CRC covers the compressed body; unsupported codecs name
-    themselves instead of mis-parsing."""
-    from aether_firebase_consumer_spark.sources.kafka_wire import (
-        encode_record_batch,
-    )
-
-    entries = [(0, 100, b"k" * 50, b"v" * 500), (1, 200, None, b"w" * 500)]
-    plain = encode_record_batch(entries)
-    gz = encode_record_batch(entries, codec="gzip")
-    assert len(gz) < len(plain)            # it actually compressed
-    assert decode_record_batches(gz) == entries
-    # corrupt the compressed payload: CRC32C catches it first
-    bad = bytearray(gz)
-    bad[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC32C"):
-        decode_record_batches(bytes(bad))
-    # codec ids 0-4 (none/gzip/snappy/lz4/zstd) all decode; an id beyond
-    # the Kafka-assigned range names the gap instead of mis-parsing
-    legit = bytearray(plain)
-    legit[21 + 1] = (legit[21 + 1] & ~0x07) | 0x05   # attrs ← codec 5
-    with pytest.raises(ValueError, match="codec 5 unsupported"):
-        decode_record_batches(bytes(legit), validate_crc=False)
-    # codec 4 IS dispatched to the zstd decoder: flipping the attrs on
-    # an uncompressed body reaches it, and it rejects the garbage by
-    # name rather than silently mis-parsing
-    legit[21 + 1] = (legit[21 + 1] & ~0x07) | 0x04   # attrs ← codec 4
-    with pytest.raises(ValueError, match="zstd record-batch payload"):
-        decode_record_batches(bytes(legit), validate_crc=False)
-
-    with MiniKafkaBroker(clock=lambda: 1, fetch_codec="gzip") as b:
-        with KafkaWireClient(b.host, b.port) as c:
-            c.produce_records("gz.t", 0,
-                              [(b"a", b"x" * 1000, 11),
-                               (b"b", b"y" * 1000, 22)], codec="gzip")
-            c.produce("gz.t", 0, [(b"c", b"z")])   # v0 interop too
-            got = c.fetch_records("gz.t", 0, 0)
-    assert got == [(0, 11, b"a", b"x" * 1000), (1, 22, b"b", b"y" * 1000),
-                   (2, 1, b"c", b"z")]
 
 
 def test_kafka_timestamp_drives_event_time_window(spark, broker, tmp_path):
@@ -634,20 +499,6 @@ def test_join_rejects_disjoint_protocol_list(broker):
                          protocols=["my-custom-only"])
 
 
-def test_group_poll_raises_on_stalled_fetch(broker):
-    """GroupConsumer.poll applies the same stalled-partition detection
-    PollLoopConsumer got in round 6: pending offsets whose fetch
-    decodes zero messages RAISE instead of returning empty forever
-    (ADVICE r6 #1)."""
-    _seed(broker, "gs.t", 1, 1)
-    with GroupConsumer(broker.bootstrap, "gs-grp", ["gs.t"]) as con:
-        con.poll(0)                       # join, resolve assignment
-        con._client.fetch = lambda *a, **kw: []   # truncated-away batch
-        con._client._max_version = lambda api: 0  # v0-only broker
-        with pytest.raises(RuntimeError, match="max_bytes|truncated"):
-            con.poll(max_messages=5)
-
-
 def test_commit_fenced_after_membership_loss(broker):
     """A member whose membership lapsed must not commit stale
     positions over the group's progress (zombie commit, ADVICE r6
@@ -728,72 +579,3 @@ def test_static_membership_restart_keeps_assignment(broker):
         if b2 is not None:
             b2.stop()
 
-
-def test_idempotent_producer_dedupes_retries(broker):
-    """KIP-98 idempotence: a verbatim retry of the last batch (the
-    ambiguous-outcome resend after a request timeout) appends NOTHING
-    and answers with the original base offset; sequence gaps and
-    stale sequences are fenced with the spec error codes."""
-    from aether_firebase_consumer_spark.sources.kafka_wire import (
-        IdempotentProducer,
-    )
-
-    broker.create_topic("idem.t", partitions=1)
-    with _client(broker) as c:
-        p = IdempotentProducer(c)
-        assert p.producer_id >= 1000 and p.epoch == 0
-        b0 = p.send("idem.t", 0, [(b"k1", b"v1", 10), (b"k2", b"v2", 20)])
-        assert b0 == 0
-        # network retry: same sequence, same messages → deduped
-        assert p.retry_last("idem.t", 0) == 0
-        b1 = p.send("idem.t", 0, [(b"k3", b"v3", 30)])
-        assert b1 == 2
-        assert p.retry_last("idem.t", 0) == 2
-        got = c.fetch_records("idem.t", 0, 0)
-        assert [(o, k) for o, _ts, k, _v in got] == [
-            (0, b"k1"), (1, b"k2"), (2, b"k3")]   # exactly once each
-
-        # sequence GAP (a lost batch) is rejected loudly
-        with pytest.raises(RuntimeError, match="out-of-order"):
-            c.produce_records("idem.t", 0, [(b"x", b"y", 40)],
-                              producer_id=p.producer_id,
-                              producer_epoch=p.epoch, base_sequence=99)
-        # a sequence below the window is a duplicate error, not data
-        with pytest.raises(RuntimeError, match="[Dd]uplicate"):
-            c.produce_records("idem.t", 0, [(b"x", b"y", 40)],
-                              producer_id=p.producer_id,
-                              producer_epoch=p.epoch, base_sequence=0)
-        # two producers don't fence each other; plain produces (-1)
-        # bypass idempotence entirely
-        p2 = IdempotentProducer(c)
-        assert p2.producer_id != p.producer_id
-        assert p2.send("idem.t", 0, [(b"a", b"b", 50)]) == 3
-        assert c.produce_records("idem.t", 0, [(b"c", b"d", 60)]) == 4
-        assert len(c.fetch_records("idem.t", 0, 0)) == 5
-
-
-def test_zstd_record_batches_actually_compress():
-    """Round 8: the zstd encoder gained a Huffman-literals tier, so a
-    codec-4 produce SHRINKS text payloads instead of storing them
-    (the r7 encoder was store-only — ratio >= 1.0 on everything but
-    runs). Mirrors the gzip ratio pin above; round-trips through the
-    broker's fetch path too."""
-    from aether_firebase_consumer_spark.sources.kafka_wire import (
-        encode_record_batch,
-    )
-
-    entries = [(i, 1000 + i, b"order-%d" % i,
-                (b'{"status": "shipped", "priority": "high", '
-                 b'"note": "order line %d"}' % i)) for i in range(200)]
-    plain = encode_record_batch(entries)
-    zst = encode_record_batch(entries, codec="zstd")
-    assert len(zst) < 0.9 * len(plain)
-    assert decode_record_batches(zst) == entries
-
-    with MiniKafkaBroker(clock=lambda: 1, fetch_codec="zstd") as b:
-        with KafkaWireClient(b.host, b.port) as c:
-            c.produce_records("zr.t", 0,
-                              [(b"k", b"the quick brown fox " * 40, 5)],
-                              codec="zstd")
-            got = c.fetch_records("zr.t", 0, 0)
-    assert got == [(0, 5, b"k", b"the quick brown fox " * 40)]

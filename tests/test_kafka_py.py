@@ -17,8 +17,6 @@ from aether_firebase_consumer_spark.sources.kafka_wire import (
     LATEST,
     KafkaWireClient,
     MiniKafkaBroker,
-    decode_message_set,
-    encode_message_set,
 )
 
 
@@ -30,55 +28,6 @@ def broker():
 
 def _client(broker):
     return KafkaWireClient(broker.host, broker.port)
-
-
-# ---------------------------------------------------------------- wire codec
-
-def test_message_set_roundtrip():
-    entries = [(0, b"k0", b"v0"), (1, None, b"v1"), (2, b"k2", None)]
-    assert decode_message_set(encode_message_set(entries)) == entries
-
-
-def test_message_set_crc_validated():
-    data = bytearray(encode_message_set([(0, b"k", b"value")]))
-    data[-1] ^= 0xFF  # flip a value byte; stored CRC now wrong
-    with pytest.raises(ValueError, match="CRC"):
-        decode_message_set(bytes(data))
-
-
-def test_message_set_partial_trailing_message_dropped():
-    full = encode_message_set([(0, b"k", b"v0"), (1, b"k", b"v1")])
-    # Kafka fetch responses may truncate the last message at max_bytes
-    assert decode_message_set(full[:-3]) == [(0, b"k", b"v0")]
-
-
-# ------------------------------------------------------------ broker/client
-
-def test_broker_produce_fetch_offsets(broker):
-    with _client(broker) as c:
-        base = c.produce("t.a", 0, [(b"k1", b"v1"), (None, b"v2")])
-        assert base == 0
-        assert c.produce("t.a", 0, [(b"k3", b"v3")]) == 2
-        assert c.list_offsets("t.a", 0, EARLIEST) == 0
-        assert c.list_offsets("t.a", 0, LATEST) == 3
-        assert c.fetch("t.a", 0, 1) == [(1, None, b"v2"), (2, b"k3", b"v3")]
-        # metadata reflects auto-created topics
-        assert c.metadata() == {"t.a": [0]}
-
-
-def test_broker_fetch_respects_max_bytes_progressively(broker):
-    with _client(broker) as c:
-        c.produce("t.b", 0, [(None, f"value-{i}".encode())
-                             for i in range(50)])
-        # tiny max_bytes still returns ≥1 message (no livelock) and a
-        # bounded fetch loop drains the log exactly once
-        got, offset = [], 0
-        while offset < 50:
-            batch = c.fetch("t.b", 0, offset, max_bytes=64)
-            assert batch
-            got.extend(batch)
-            offset = batch[-1][0] + 1
-        assert [o for o, _, _ in got] == list(range(50))
 
 
 # ----------------------------------------------------------- batch reading
@@ -95,8 +44,8 @@ def test_batch_read_parallel_partitions(spark, broker):
     broker.create_topic("tenant.orders", partitions=3)
     with _client(broker) as c:
         for i in range(30):
-            c.produce("tenant.orders", i % 3,
-                      [(f"k{i}".encode(), f"v{i}".encode())])
+            c.produce_records("tenant.orders", i % 3,
+                              [(f"k{i}".encode(), f"v{i}".encode())])
     df = (spark.read.format("kafka_py")
           .option("bootstrap", broker.bootstrap)
           .option("subscribe", "tenant.orders").load())
@@ -127,7 +76,8 @@ def test_stream_incremental_and_pattern_growth(spark, broker, tmp_path):
     broker.create_topic("tenant.topic-a", partitions=2)
     with _client(broker) as c:
         for i in range(10):
-            c.produce("tenant.topic-a", i % 2, [(None, f"v{i}".encode())])
+            c.produce_records("tenant.topic-a", i % 2,
+                              [(None, f"v{i}".encode())])
     sdf = (spark.readStream.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
            .option("subscribePattern", r"tenant\..*").load())
@@ -137,11 +87,11 @@ def test_stream_incremental_and_pattern_growth(spark, broker, tmp_path):
         q.processAllAvailable()
         assert spark.table("kpy_grow").count() == 10
         with _client(broker) as c:
-            c.produce("tenant.topic-a", 0, [(None, b"late")])
+            c.produce_records("tenant.topic-a", 0, [(None, b"late")])
             # topic that appears mid-stream and matches the pattern is
             # picked up from offset 0; non-matching topic is not
-            c.produce("tenant.topic-b", 0, [(None, b"new-topic")])
-            c.produce("other.topic", 0, [(None, b"ignored")])
+            c.produce_records("tenant.topic-b", 0, [(None, b"new-topic")])
+            c.produce_records("other.topic", 0, [(None, b"ignored")])
         q.processAllAvailable()
         out = spark.table("kpy_grow")
         assert out.count() == 12
@@ -156,7 +106,7 @@ def test_stream_restart_exactly_once(spark, broker, tmp_path):
     broker.create_topic("t.x", partitions=2)
     with _client(broker) as c:
         for i in range(10):
-            c.produce("t.x", i % 2, [(None, f"v{i}".encode())])
+            c.produce_records("t.x", i % 2, [(None, f"v{i}".encode())])
     ckpt, outdir = str(tmp_path / "ck"), str(tmp_path / "out")
     sdf = (spark.readStream.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
@@ -173,8 +123,8 @@ def test_stream_restart_exactly_once(spark, broker, tmp_path):
     run_once()
     assert spark.read.parquet(outdir).count() == 10
     with _client(broker) as c:
-        c.produce("t.x", 0, [(None, b"extra1")])
-        c.produce("t.x", 1, [(None, b"extra2")])
+        c.produce_records("t.x", 0, [(None, b"extra1")])
+        c.produce_records("t.x", 1, [(None, b"extra2")])
     run_once()  # restart from checkpoint: only the 2 new offsets
     out = spark.read.parquet(outdir)
     assert out.count() == 12
@@ -185,7 +135,7 @@ def test_stream_restart_exactly_once(spark, broker, tmp_path):
 def test_stream_starting_offsets_latest(spark, broker, tmp_path):
     _register(spark)
     with _client(broker) as c:
-        c.produce("t.y", 0, [(None, b"old1"), (None, b"old2")])
+        c.produce_records("t.y", 0, [(None, b"old1"), (None, b"old2")])
     sdf = (spark.readStream.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
            .option("subscribe", "t.y")
@@ -196,7 +146,7 @@ def test_stream_starting_offsets_latest(spark, broker, tmp_path):
         q.processAllAvailable()
         assert spark.table("kpy_latest").count() == 0  # history skipped
         with _client(broker) as c:
-            c.produce("t.y", 0, [(None, b"fresh")])
+            c.produce_records("t.y", 0, [(None, b"fresh")])
         q.processAllAvailable()
         vals = [bytes(r.value) for r in spark.table("kpy_latest").collect()]
         assert vals == [b"fresh"]
@@ -254,8 +204,8 @@ def test_reference_path_kafka_avro_pipeline(spark, broker, tmp_path):
     ]
     with _client(broker) as c:
         for i, d in enumerate(docs):
-            c.produce("t1.docs", i % 2,
-                      [(d["id"].encode(), encode_record(DOC_AVSC, d))])
+            c.produce_records("t1.docs", i % 2,
+                              [(d["id"].encode(), encode_record(DOC_AVSC, d))])
 
     stream = (spark.readStream.format("kafka_py")
               .option("bootstrap", broker.bootstrap)
@@ -290,8 +240,8 @@ def test_reference_path_kafka_avro_pipeline(spark, broker, tmp_path):
     # hash gate suppresses unchanged docs end-to-end
     with _client(broker) as c:
         for i, d in enumerate(docs):
-            c.produce("t1.docs", i % 2,
-                      [(d["id"].encode(), encode_record(DOC_AVSC, d))])
+            c.produce_records("t1.docs", i % 2,
+                              [(d["id"].encode(), encode_record(DOC_AVSC, d))])
     job2 = StreamingUpsertJob(cfg, doc_table, hash_table)
     q = job2.writer(decoded, str(tmp_path / "ckpt")).start()
     q.processAllAvailable()
@@ -308,7 +258,7 @@ def test_stream_kafka_source_falls_back_to_wire(spark, broker, tmp_path):
     )
 
     with _client(broker) as c:
-        c.produce("t1.a", 0, [(None, b"m1"), (None, b"m2")])
+        c.produce_records("t1.a", 0, [(None, b"m1"), (None, b"m2")])
     sdf = stream_kafka_source(spark, broker.bootstrap, r"t1\..*")
     q = (sdf.writeStream.format("memory").queryName("kpy_fb")
          .option("checkpointLocation", str(tmp_path / "ck")).start())
@@ -359,8 +309,8 @@ def test_job_reconcile_on_kafka_source(spark, broker, tmp_path):
         return start_fn
 
     with _client(broker) as c:
-        c.produce("t1.alpha", 0, [(None, b"a1"), (None, b"a2")])
-        c.produce("t1.beta", 0, [(None, b"b1")])
+        c.produce_records("t1.alpha", 0, [(None, b"a1"), (None, b"a2")])
+        c.produce_records("t1.beta", 0, [(None, b"b1")])
 
     mgr = JobManager(str(tmp_path / "ckpt"))
     job = mgr.add_job("t1", "job-k", make_start_fn(r"t1\.alpha"))
@@ -374,8 +324,9 @@ def test_job_reconcile_on_kafka_source(spark, broker, tmp_path):
     assert not q1.isActive and job.query is not q1
     assert job.get_status() == JobStatus.NORMAL
     with _client(broker) as c:
-        c.produce("t1.alpha", 0, [(None, b"a3")])   # no longer subscribed
-        c.produce("t1.beta", 0, [(None, b"b2")])
+        # t1.alpha is no longer subscribed
+        c.produce_records("t1.alpha", 0, [(None, b"a3")])
+        c.produce_records("t1.beta", 0, [(None, b"b2")])
     job.query.processAllAvailable()
     job.stop()
 
@@ -393,7 +344,7 @@ def test_max_offsets_per_trigger_bounds_batches(spark, broker, tmp_path):
     _register(spark)
     broker.create_topic("t.cap", partitions=1)
     with _client(broker) as c:
-        c.produce("t.cap", 0, [(None, b"seed")])
+        c.produce_records("t.cap", 0, [(None, b"seed")])
     sdf = (spark.readStream.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
            .option("subscribe", "t.cap")
@@ -404,8 +355,8 @@ def test_max_offsets_per_trigger_bounds_batches(spark, broker, tmp_path):
         q.processAllAvailable()           # batch 0: the seed row
         assert spark.table("kpy_cap").count() == 1
         with _client(broker) as c:        # 35-message backlog
-            c.produce("t.cap", 0,
-                      [(None, f"m{i}".encode()) for i in range(35)])
+            c.produce_records("t.cap", 0,
+                              [(None, f"m{i}".encode()) for i in range(35)])
         q.processAllAvailable()
         out = spark.table("kpy_cap")
         assert out.count() == 36          # drained, no duplicates
@@ -468,7 +419,7 @@ def test_stream_topic_to_topic_pipe(spark, broker, tmp_path):
     broker.create_topic("pipe.out", partitions=2)
     with _client(broker) as c:
         for i in range(8):
-            c.produce("pipe.in", i % 2, [(None, f"m{i}".encode())])
+            c.produce_records("pipe.in", i % 2, [(None, f"m{i}".encode())])
     sdf = (spark.readStream.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
            .option("subscribe", "pipe.in").load())
@@ -481,7 +432,7 @@ def test_stream_topic_to_topic_pipe(spark, broker, tmp_path):
     try:
         q.processAllAvailable()
         with _client(broker) as c:
-            c.produce("pipe.in", 0, [(None, b"late")])
+            c.produce_records("pipe.in", 0, [(None, b"late")])
         q.processAllAvailable()
     finally:
         q.stop()
@@ -490,40 +441,6 @@ def test_stream_topic_to_topic_pipe(spark, broker, tmp_path):
            .option("subscribe", "pipe.out").load())
     vals = sorted(bytes(r.value).decode() for r in out.collect())
     assert vals == sorted([f"M{i}" for i in range(8)] + ["LATE"])
-
-
-# --------------------------------------------------------- property tests
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    _HAS_HYPOTHESIS = True
-except ImportError:  # pragma: no cover
-    _HAS_HYPOTHESIS = False
-
-
-if _HAS_HYPOTHESIS:
-    _msg = st.tuples(st.one_of(st.none(), st.binary(max_size=64)),
-                     st.one_of(st.none(), st.binary(max_size=256)))
-
-    @given(st.lists(_msg, max_size=30))
-    @settings(max_examples=60, deadline=None)
-    def test_message_set_roundtrip_property(msgs):
-        entries = [(i, k, v) for i, (k, v) in enumerate(msgs)]
-        assert decode_message_set(encode_message_set(entries)) == entries
-
-    @given(st.lists(_msg, min_size=1, max_size=10),
-           st.integers(min_value=1, max_value=11))
-    @settings(max_examples=60, deadline=None)
-    def test_message_set_truncation_property(msgs, cut):
-        """Any truncation yields a clean prefix: never an exception,
-        never a corrupt record — the consumer contract for max_bytes
-        fetch responses."""
-        entries = [(i, k, v) for i, (k, v) in enumerate(msgs)]
-        full = encode_message_set(entries)
-        got = decode_message_set(full[:len(full) - min(cut, len(full))])
-        assert got == entries[:len(got)]
 
 
 # --------------------------------------- schema-registry framed messages
@@ -555,7 +472,7 @@ def test_framed_mixed_generation_topic(spark, broker):
 
     _register(spark)
     with _client(broker) as c:
-        c.produce("t.framed", 0, [
+        c.produce_records("t.framed", 0, [
             (None, encode_framed(1, V1_AVSC, {"id": "a", "count": 7})),
             (None, encode_framed(2, V2_AVSC,
                                  {"id": "b", "count": 9_999_999_999,
@@ -582,7 +499,7 @@ def test_framed_unknown_schema_id_raises(spark, broker):
 
     _register(spark)
     with _client(broker) as c:
-        c.produce("t.framed2", 0, [
+        c.produce_records("t.framed2", 0, [
             (None, encode_framed(9, V1_AVSC, {"id": "x", "count": 1}))])
     raw = (spark.read.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
@@ -593,25 +510,14 @@ def test_framed_unknown_schema_id_raises(spark, broker):
         out.collect()
 
 
-def test_list_offsets_bulk_single_round_trip(broker):
-    with _client(broker) as c:
-        c.produce("bulk.a", 0, [(None, b"x"), (None, b"y")])
-        c.produce("bulk.a", 1, [(None, b"z")])
-        c.produce("bulk.b", 0, [(None, b"w")])
-        out = c.list_offsets_bulk({"bulk.a": [0, 1], "bulk.b": [0]}, LATEST)
-        assert out == {("bulk.a", 0): 2, ("bulk.a", 1): 1, ("bulk.b", 0): 1}
-        lo = c.list_offsets_bulk({"bulk.a": [0, 1]}, EARLIEST)
-        assert lo == {("bulk.a", 0): 0, ("bulk.a", 1): 0}
-
-
 def test_min_partitions_splits_offset_ranges(spark, broker, tmp_path):
     """minPartitions=8 over a single-Kafka-partition topic: the batch
     splits into ≥8 Spark tasks with disjoint offset ranges, result
     identical — the skewed-topic parallelism escape hatch."""
     _register(spark)
     with _client(broker) as c:
-        c.produce("skewed.t", 0, [(None, f"m{i}".encode())
-                                  for i in range(200)])
+        c.produce_records("skewed.t", 0, [(None, f"m{i}".encode())
+                                          for i in range(200)])
     df = (spark.read.format("kafka_py")
           .option("bootstrap", broker.bootstrap)
           .option("subscribe", "skewed.t")
@@ -641,18 +547,18 @@ def test_log_compaction_preserves_offsets_and_reader_handles_gaps(
     tolerate the gaps — the real-Kafka compacted-topic contract."""
     _register(spark)
     with _client(broker) as c:
-        c.produce("state.t", 0, [(b"A", b"a1"), (b"B", b"b1"),
-                                 (b"A", b"a2"), (b"C", b"c1"),
-                                 (b"A", b"a3")])
+        c.produce_records("state.t", 0, [(b"A", b"a1"), (b"B", b"b1"),
+                                         (b"A", b"a2"), (b"C", b"c1"),
+                                         (b"A", b"a3")])
     assert broker.compact("state.t") == 2   # a1, a2 removed
     with _client(broker) as c:
         assert c.list_offsets("state.t", 0, EARLIEST) == 1  # b1's offset
         assert c.list_offsets("state.t", 0, LATEST) == 5
-        got = c.fetch("state.t", 0, 0)
-        assert got == [(1, b"B", b"b1"), (3, b"C", b"c1"),
-                       (4, b"A", b"a3")]
+        got = c.fetch_records("state.t", 0, 0)
+        assert [(o, k, v) for o, _ts, k, v in got] \
+            == [(1, b"B", b"b1"), (3, b"C", b"c1"), (4, b"A", b"a3")]
         # fetch from inside a gap lands on the next retained offset
-        assert c.fetch("state.t", 0, 2)[0] == (3, b"C", b"c1")
+        assert c.fetch_records("state.t", 0, 2)[0][0] == 3
 
     df = (spark.read.format("kafka_py")
           .option("bootstrap", broker.bootstrap)
@@ -670,7 +576,7 @@ def test_log_compaction_preserves_offsets_and_reader_handles_gaps(
         q.processAllAvailable()
         assert spark.table("kpy_compact").count() == 3
         with _client(broker) as c:
-            c.produce("state.t", 0, [(b"B", b"b2")])
+            c.produce_records("state.t", 0, [(b"B", b"b2")])
         q.processAllAvailable()
         assert spark.table("kpy_compact").count() == 4
     finally:
@@ -681,26 +587,26 @@ def test_control_plane_lists_broker_topics(broker):
     from aether_firebase_consumer_spark.control.jobs import JobManager
 
     with _client(broker) as c:
-        c.produce("t1.alpha", 0, [(None, b"x")])
-        c.produce("t1.beta", 0, [(None, b"x")])
-        c.produce("t2.gamma", 0, [(None, b"x")])
-        c.produce("t10.delta", 0, [(None, b"x")])  # prefix-share trap
+        c.produce_records("t1.alpha", 0, [(None, b"x")])
+        c.produce_records("t1.beta", 0, [(None, b"x")])
+        c.produce_records("t2.gamma", 0, [(None, b"x")])
+        c.produce_records("t10.delta", 0, [(None, b"x")])  # prefix-share trap
     assert JobManager.list_topics_from_broker(broker.bootstrap, "t1") \
         == ["alpha", "beta"]
 
 
 def test_event_time_window_over_wire_stream(spark, broker, tmp_path):
     """Event-time tumbling window with a watermark over the wire
-    source: magic-0 messages carry no broker timestamp, so event time
-    comes from the payload — exactly the 100 TB posture (broker
-    timestamps are ingest time; analytics windows on payload time)."""
+    source, with event time taken from the payload rather than the
+    record timestamp — exactly the 100 TB posture (record timestamps
+    are produce time; analytics windows on payload time)."""
     import json as _json
 
     _register(spark)
     with _client(broker) as c:
         evs = [("2024-01-01T00:00:05", 1.0), ("2024-01-01T00:00:55", 2.0),
                ("2024-01-01T00:01:10", 4.0), ("2024-01-01T00:02:30", 8.0)]
-        c.produce("win.t", 0, [
+        c.produce_records("win.t", 0, [
             (None, _json.dumps({"ts": ts, "v": v}).encode())
             for ts, v in evs])
     sdf = (spark.readStream.format("kafka_py")
@@ -745,7 +651,7 @@ def test_dead_letter_queue_pattern(spark, broker, tmp_path):
         {"name": "id", "type": "string"},
         {"name": "n", "type": "long"}]}
     with _client(broker) as c:
-        c.produce("dlq.in", 0, [
+        c.produce_records("dlq.in", 0, [
             (None, encode_record(avsc, {"id": "a", "n": 1})),
             (None, b"\xff\xff\xff\xff"),
             (None, encode_record(avsc, {"id": "b", "n": 2})),
@@ -797,8 +703,8 @@ def test_rest_list_topics_from_live_broker(broker, tmp_path):
     )
 
     with _client(broker) as c:
-        c.produce("t1.alpha", 0, [(None, b"x")])
-        c.produce("t2.beta", 0, [(None, b"x")])
+        c.produce_records("t1.alpha", 0, [(None, b"x")])
+        c.produce_records("t2.beta", 0, [(None, b"x")])
     api = ControlApi(ResourceRegistry(), JobManager(str(tmp_path / "ck")),
                      bootstrap=broker.bootstrap)
     port = api.start()
@@ -830,72 +736,6 @@ def test_rest_list_topics_from_live_broker(broker, tmp_path):
 
 # ----------------------------------------------- consumer-group poll loop
 
-def test_offset_commit_fetch_group_isolation(broker):
-    with _client(broker) as c:
-        c.produce("g.t", 0, [(None, b"x"), (None, b"y")])
-        assert c.offset_fetch("g1", "g.t", 0) == -1   # unknown group
-        c.offset_commit("g1", "g.t", 0, 2)
-        assert c.offset_fetch("g1", "g.t", 0) == 2
-        assert c.offset_fetch("g2", "g.t", 0) == -1   # isolated
-
-
-def test_poll_loop_consumer_crash_resume(broker):
-    """The reference's manual-commit loop: poll → process → commit;
-    a crash between processing and commit re-delivers (at-least-once),
-    a crash after commit resumes exactly; groups are independent."""
-    from aether_firebase_consumer_spark.sources.kafka_consumer import (
-        PollLoopConsumer,
-    )
-
-    with _client(broker) as c:
-        c.produce("loop.t", 0, [(None, f"m{i}".encode())
-                                for i in range(10)])
-
-    with PollLoopConsumer(broker.bootstrap, "job1",
-                          topics=["loop.t"]) as con:
-        first = con.poll(max_messages=4)
-        assert [bytes(v).decode() for *_, v in first] \
-            == ["m0", "m1", "m2", "m3"]
-        con.commit()
-        con.poll(max_messages=2)   # m4, m5 consumed but NOT committed
-    # "crash": new consumer, same group → resumes at the committed 4
-    with PollLoopConsumer(broker.bootstrap, "job1",
-                          topics=["loop.t"]) as con:
-        redelivered = con.poll(max_messages=3)
-        assert [bytes(v).decode() for *_, v in redelivered] \
-            == ["m4", "m5", "m6"]
-        con.commit()
-    # an unrelated group starts from auto.offset.reset=earliest
-    with PollLoopConsumer(broker.bootstrap, "job2",
-                          topics=["loop.t"]) as con:
-        assert bytes(con.poll(1)[0][4]) == b"m0"
-    # latest reset skips history
-    with _client(broker) as c:
-        pass
-    with PollLoopConsumer(broker.bootstrap, "job3", topics=["loop.t"],
-                          auto_offset_reset="latest") as con:
-        assert con.poll(5) == []
-        with _client(broker) as c:
-            c.produce("loop.t", 0, [(None, b"fresh")])
-        assert bytes(con.poll(1)[0][4]) == b"fresh"
-
-
-def test_poll_loop_consumer_pattern_and_round_robin(broker):
-    from aether_firebase_consumer_spark.sources.kafka_consumer import (
-        PollLoopConsumer,
-    )
-
-    broker.create_topic("rr.a", partitions=2)
-    with _client(broker) as c:
-        c.produce("rr.a", 0, [(None, b"p0-a"), (None, b"p0-b")])
-        c.produce("rr.a", 1, [(None, b"p1-a")])
-        c.produce("other.x", 0, [(None, b"ignored")])
-    with PollLoopConsumer(broker.bootstrap, "g", pattern=r"rr\..*") as con:
-        got = con.poll(max_messages=10)
-        assert sorted(bytes(v).decode() for *_, v in got) \
-            == ["p0-a", "p0-b", "p1-a"]
-
-
 def test_consumer_lag_endpoint(broker, tmp_path):
     import json as _json
     import urllib.request
@@ -910,7 +750,8 @@ def test_consumer_lag_endpoint(broker, tmp_path):
     )
 
     with _client(broker) as c:
-        c.produce("t1.a", 0, [(None, f"m{i}".encode()) for i in range(6)])
+        c.produce_records("t1.a", 0, [(None, f"m{i}".encode())
+                                      for i in range(6)])
     with PollLoopConsumer(broker.bootstrap, "job1", topics=["t1.a"]) as con:
         con.poll(max_messages=4)
         con.commit()
@@ -943,7 +784,7 @@ def test_volume_10k_messages_exactly_once(spark, broker, tmp_path):
             msgs = [(None, f"p{p}-m{i}-{'x' * 64}".encode())
                     for i in range(2500)]
             for i in range(0, len(msgs), 500):
-                c.produce("vol.t", p, msgs[i:i + 500])
+                c.produce_records("vol.t", p, msgs[i:i + 500])
     df = (spark.read.format("kafka_py")
           .option("bootstrap", broker.bootstrap)
           .option("subscribe", "vol.t").load())
@@ -967,70 +808,6 @@ def test_volume_10k_messages_exactly_once(spark, broker, tmp_path):
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == 10_000
     assert out.distinct().count() == 10_000
-
-
-def test_api_versions_negotiation(broker):
-    """The first request real clients send: the advertised ranges are
-    exactly what the broker dispatches — v0 everywhere, plus the
-    record-batch dialect (Produce v3 / Fetch v4), the timestamp
-    lookup (ListOffsets v1), and static membership (JoinGroup v5)."""
-    from aether_firebase_consumer_spark.sources.kafka_wire import (
-        API_FETCH,
-        API_JOIN_GROUP,
-        API_LIST_OFFSETS,
-        API_METADATA,
-        API_OFFSET_COMMIT,
-        API_PRODUCE,
-        MiniKafkaBroker,
-    )
-
-    with _client(broker) as c:
-        vers = c.api_versions()
-    assert vers[API_PRODUCE] == (0, 3)
-    assert vers[API_FETCH] == (0, 4)
-    assert vers[API_LIST_OFFSETS] == (0, 1)
-    assert vers[API_JOIN_GROUP] == (0, 5)   # KIP-345 static membership
-    for key in (API_METADATA, API_OFFSET_COMMIT):
-        assert vers[key] == (0, 0)
-    assert vers == MiniKafkaBroker.SUPPORTED
-
-
-def test_poll_raises_on_stalled_fetch_instead_of_spinning(broker):
-    """Against a v0-ONLY broker, a pending offset whose fetch decodes
-    to zero messages (v0 max_bytes truncation of an oversized message)
-    must RAISE, not spin or silently return empty forever (ADVICE r5).
-    On a Fetch-v4 broker the consumer instead retries at v4, which
-    serves whole record batches — covered by the rescue test below."""
-    from aether_firebase_consumer_spark.sources.kafka_consumer import (
-        PollLoopConsumer,
-    )
-
-    with _client(broker) as c:
-        c.produce("stall.t", 0, [(None, b"big-message")])
-    with PollLoopConsumer(broker.bootstrap, "g-stall",
-                          topics=["stall.t"]) as con:
-        con._client.fetch = lambda *a, **kw: []  # truncated-away batch
-        con._client._max_version = lambda api: 0   # v0-only broker
-        with pytest.raises(RuntimeError, match="max_bytes|truncated"):
-            con.poll(max_messages=5)
-
-
-def test_poll_v4_rescues_v0_truncation(broker):
-    """On a broker advertising Fetch v4, the same empty-v0-fetch
-    situation resolves itself: the consumer retries at v4 (record
-    batches arrive whole) and delivers the message instead of
-    raising."""
-    from aether_firebase_consumer_spark.sources.kafka_consumer import (
-        PollLoopConsumer,
-    )
-
-    with _client(broker) as c:
-        c.produce("rescue.t", 0, [(None, b"big-message")])
-    with PollLoopConsumer(broker.bootstrap, "g-rescue",
-                          topics=["rescue.t"]) as con:
-        con._client.fetch = lambda *a, **kw: []  # v0 view truncated
-        got = con.poll(max_messages=5)
-    assert [v for _t, _p, _o, _k, v in got] == [b"big-message"]
 
 
 def test_jar_fallback_only_for_source_missing_errors():
@@ -1110,7 +887,7 @@ def test_assign_subscription_mode(spark, broker):
     broker.create_topic("asg.t", partitions=3)
     with _client(broker) as c:
         for p in range(3):
-            c.produce("asg.t", p, [(None, b"p%d" % p)])
+            c.produce_records("asg.t", p, [(None, b"p%d" % p)])
     got = (spark.read.format("kafka_py")
            .option("bootstrap", broker.bootstrap)
            .option("assign", '{"asg.t": [0, 2]}')

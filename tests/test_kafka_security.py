@@ -28,7 +28,7 @@ def _seed(broker):
     broker.create_topic("sec.t", partitions=1)
     with KafkaWireClient(broker.host, broker.port,
                          sasl_plain=("svc-ingest", "hunter2")) as c:
-        c.produce("sec.t", 0, [(b"k", b"v")])
+        c.produce_records("sec.t", 0, [(b"k", b"v", 1)])
 
 
 def test_sasl_plain_auth_and_gating():
@@ -37,7 +37,7 @@ def test_sasl_plain_auth_and_gating():
         # authenticated client: full API surface
         with KafkaWireClient(b.host, b.port,
                              sasl_plain=("svc-probe", "s3cret")) as c:
-            assert c.fetch("sec.t", 0, 0) == [(0, b"k", b"v")]
+            assert c.fetch_records("sec.t", 0, 0) == [(0, 1, b"k", b"v")]
 
         # wrong password: the authenticate step fails loudly
         with pytest.raises(RuntimeError, match="SASL authentication"):
@@ -56,7 +56,7 @@ def test_sasl_plain_auth_and_gating():
             assert c.api_versions()
             with pytest.raises((ConnectionError, EOFError, OSError,
                                 RuntimeError)):
-                c.fetch("sec.t", 0, 0)
+                c.fetch_records("sec.t", 0, 0)
         finally:
             c.close()
 
@@ -118,8 +118,8 @@ def test_tls_listener_roundtrip(tls_contexts):
         b.create_topic("tls.t", partitions=1)
         with KafkaWireClient(b.host, b.port,
                              ssl_context=client_ctx) as c:
-            c.produce("tls.t", 0, [(b"k", b"v")])
-            assert c.fetch("tls.t", 0, 0) == [(0, b"k", b"v")]
+            c.produce_records("tls.t", 0, [(b"k", b"v", 1)])
+            assert c.fetch_records("tls.t", 0, 0) == [(0, 1, b"k", b"v")]
         # a plaintext client cannot speak to a TLS listener
         with pytest.raises((ConnectionError, EOFError, OSError,
                             RuntimeError, ssl.SSLError)):
@@ -142,8 +142,8 @@ def test_sasl_ssl_composed_and_group_consumer(tls_contexts):
         with KafkaWireClient(b.host, b.port, ssl_context=client_ctx,
                              sasl_plain=("svc-ingest",
                                          "hunter2")) as c:
-            c.produce("ss.t", 0, [(b"a", b"1")])
-            c.produce("ss.t", 1, [(b"b", b"2")])
+            c.produce_records("ss.t", 0, [(b"a", b"1")])
+            c.produce_records("ss.t", 1, [(b"b", b"2")])
         with GroupConsumer(b.bootstrap, "ss-grp", ["ss.t"],
                            background_heartbeat=True,
                            ssl_context=client_ctx,
@@ -189,7 +189,7 @@ def test_kafka_py_source_over_sasl_ssl(spark, tls_contexts, tmp_path):
         with KafkaWireClient(b.host, b.port, ssl_context=cli,
                              sasl_plain=("svc-ingest",
                                          "hunter2")) as c:
-            c.produce("spark.sec", 0, [
+            c.produce_records("spark.sec", 0, [
                 (str(i).encode(),
                  json.dumps({"i": i}).encode()) for i in range(20)])
 
@@ -210,7 +210,7 @@ def test_kafka_py_source_over_sasl_ssl(spark, tls_contexts, tmp_path):
         with KafkaWireClient(b.host, b.port, ssl_context=cli,
                              sasl_plain=("svc-ingest",
                                          "hunter2")) as c:
-            total = sum(len(c.fetch("spark.sec.out", p, 0))
+            total = sum(len(c.fetch_records("spark.sec.out", p, 0))
                         for p in c.metadata(["spark.sec.out"])
                         .get("spark.sec.out", [0]))
         assert total == 5

@@ -50,7 +50,7 @@ def test_commit_makes_records_visible_atomically():
     """Records of a committed transaction appear to read_committed
     consumers only after EndTxn — and then all of them, across both
     partitions, with the marker consuming one offset per partition."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.t", partitions=2)
         with KafkaWireClient(b.host, b.port) as pc:
             p = TransactionalProducer(pc, "tx-commit")
@@ -83,7 +83,7 @@ def test_aborted_records_invisible_read_committed_visible_uncommitted():
     invisible to a read_committed GroupConsumer and visible to a
     read_uncommitted one; committed/plain records around them survive,
     original offsets preserved."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.mix", partitions=1)
         with KafkaWireClient(b.host, b.port) as pc:
             pc.produce_records("tx.mix", 0, [(b"p0", b"plain0", 1)])
@@ -112,7 +112,7 @@ def test_open_transaction_blocks_read_committed_then_unblocks():
     """LSO semantics: while a transaction is open, a read_committed
     consumer sees records only below its first offset — even records
     OTHER producers appended after it stay hidden until the marker."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.lso", partitions=1)
         with KafkaWireClient(b.host, b.port) as pc:
             pc.produce_records("tx.lso", 0, [(b"before", b"0", 1)])
@@ -139,7 +139,7 @@ def test_zombie_fencing_on_epoch_bump():
     second InitProducerId bumps the epoch, aborts the first's open
     transaction broker-side, and every later write or EndTxn from the
     first raises ProducerFencedError."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.fence", partitions=1)
         with KafkaWireClient(b.host, b.port) as c1, \
                 KafkaWireClient(b.host, b.port) as c2:
@@ -178,7 +178,7 @@ def test_send_offsets_to_transaction_atomic_with_records():
     TxnOffsetCommit commits atomically with the produced records — an
     abort rolls BOTH back, so a restarted worker reprocesses the input
     instead of dropping it."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.in", partitions=1)
         b.create_topic("tx.out", partitions=1)
         with KafkaWireClient(b.host, b.port) as pc:
@@ -206,7 +206,7 @@ def test_send_offsets_to_transaction_atomic_with_records():
 
 
 def test_end_txn_without_ongoing_transaction_is_invalid():
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         with KafkaWireClient(b.host, b.port) as c:
             pid, epoch = c.init_producer_id("tx-empty")
             with pytest.raises(RuntimeError,
@@ -221,7 +221,7 @@ def test_produce_to_unadded_partition_rejected():
     """A transactional batch for a partition never AddPartitionsToTxn'd
     is rejected (the coordinator wouldn't know where to write the
     marker) — the client surfaces the named error."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.raw", partitions=1)
         with KafkaWireClient(b.host, b.port) as c:
             pid, epoch = c.init_producer_id("tx-unadded")
@@ -238,7 +238,7 @@ def test_transaction_outcome_survives_broker_restart():
     group offsets are durable state: a broker restarted from
     snapshot() filters exactly as before, resumes offsets where the
     log ended, and still fences the old epoch."""
-    with MiniKafkaBroker(clock=lambda: 1) as b1:
+    with MiniKafkaBroker() as b1:
         b1.create_topic("tx.dur", partitions=1)
         with KafkaWireClient(b1.host, b1.port) as pc:
             p = TransactionalProducer(pc, "tx-dur")
@@ -252,7 +252,7 @@ def test_transaction_outcome_survives_broker_restart():
         leo = b1.log_end_offset("tx.dur", 0)
         state = b1.snapshot()
 
-    with MiniKafkaBroker(clock=lambda: 1, state=state) as b2:
+    with MiniKafkaBroker(state=state) as b2:
         assert b2.log_end_offset("tx.dur", 0) == leo == 4
         assert b2.txn_markers("tx.dur", 0) == \
             [(1, old_pid, True), (3, old_pid, False)]
@@ -272,7 +272,7 @@ def test_sequences_continue_across_transactions():
     """Idempotence sequences span transactions (per KIP-98): a second
     transaction's batches continue the sequence, and the broker's
     dedupe window still rejects a regression."""
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("tx.seq", partitions=1)
         with KafkaWireClient(b.host, b.port) as c:
             p = TransactionalProducer(c, "tx-seq")
@@ -298,7 +298,7 @@ def test_kafka_py_isolation_read_committed_end_to_end(spark):
     )
 
     register_kafka_py(spark)
-    with MiniKafkaBroker(clock=lambda: 7) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("sp.tx", partitions=2)
         with KafkaWireClient(b.host, b.port) as c:
             p = TransactionalProducer(c, "sp-tx")
@@ -340,7 +340,7 @@ def test_kafka_py_transactional_sink_exactly_once(spark, tmp_path):
     )
 
     register_kafka_py(spark)
-    with MiniKafkaBroker(clock=lambda: 9) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("sink.tx", partitions=2)
         df = spark.createDataFrame(
             [(str(i).encode(), b"row-%d" % i, i % 2) for i in range(20)],
@@ -378,7 +378,7 @@ def test_kafka_py_transactional_sink_streaming_all_or_nothing(
     register_kafka_py(spark)
     src = tmp_path / "src"
     src.mkdir()
-    with MiniKafkaBroker(clock=lambda: 9) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("sink.tx.s", partitions=1)
 
         def feed(name, rows):
@@ -428,7 +428,7 @@ def test_streaming_read_committed_does_not_skip_open_transaction(
     )
 
     register_kafka_py(spark)
-    with MiniKafkaBroker(clock=lambda: 3) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("rc.s", partitions=1)
         with KafkaWireClient(b.host, b.port) as pc:
             pc.produce_records("rc.s", 0, [(b"k0", b"before", 1)])
@@ -470,7 +470,7 @@ def test_eos_relay_end_to_end():
     from aether_firebase_consumer_spark.sources.kafka_consumer import (
         KafkaEosRelay,
     )
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("eos.in", partitions=2)
         b.create_topic("eos.out", partitions=2)
         with KafkaWireClient(b.host, b.port) as c:
@@ -499,7 +499,7 @@ def test_eos_relay_crash_before_commit_reprocesses_cleanly():
     from aether_firebase_consumer_spark.sources.kafka_consumer import (
         KafkaEosRelay,
     )
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("eosc.in", partitions=1)
         b.create_topic("eosc.out", partitions=1)
         with KafkaWireClient(b.host, b.port) as c:
@@ -538,7 +538,7 @@ def test_eos_relay_zombie_instance_fenced():
     from aether_firebase_consumer_spark.sources.kafka_consumer import (
         KafkaEosRelay,
     )
-    with MiniKafkaBroker(clock=lambda: 1) as b:
+    with MiniKafkaBroker() as b:
         b.create_topic("eosz.in", partitions=1)
         b.create_topic("eosz.out", partitions=1)
         with KafkaWireClient(b.host, b.port) as c:

@@ -105,7 +105,7 @@ def test_kafka_to_lake_to_derived_full_arc(spark, tmp_path):
 
     def produce(broker, entries):
         with KafkaWireClient(broker.host, broker.port) as c:
-            c.produce("vecs.cdc", 0, [
+            c.produce_records("vecs.cdc", 0, [
                 (str(i).encode(),
                  None if v is None else
                  json.dumps({"embedding": v}).encode())

@@ -254,23 +254,6 @@ def test_record_batch_roundtrip_property(entries, codec):
         assert got == [] or got == fixed
 
 
-@given(st.lists(st.tuples(st.integers(0, 2**30), _kv, _kv),
-                min_size=1, max_size=20))
-@settings(max_examples=60, deadline=None)
-def test_message_set_roundtrip_property(entries):
-    """Magic-0 message sets: round trip for any offsets/keys/values;
-    truncation yields a prefix, never an error."""
-    from aether_firebase_consumer_spark.sources.kafka_wire import (
-        decode_message_set,
-        encode_message_set,
-    )
-
-    wire = encode_message_set(entries)
-    assert decode_message_set(wire) == entries
-    got = decode_message_set(wire[:len(wire) - 1])
-    assert got == entries[:len(got)]
-
-
 @given(st.binary(max_size=200))
 @settings(max_examples=100, deadline=None)
 def test_crc32c_matches_bitwise_reference(data):

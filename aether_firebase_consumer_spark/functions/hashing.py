@@ -102,9 +102,3 @@ def content_hash_expr(df: DataFrame, cols: Iterable[str] | None = None) -> Colum
     deterministic for a given engine version.
     """
     return F.substring(F.md5(F.to_json(_sorted_struct(df, cols))), 1, HASH_LEN)
-
-
-def hash64_expr(col: Column) -> Column:
-    """xxhash64 — the cheap 64-bit integer hash for shuffles/sketches
-    (not reference-compatible; used by dedup/LSH extensions)."""
-    return F.xxhash64(col)

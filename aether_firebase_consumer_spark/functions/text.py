@@ -34,20 +34,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """A BPE-ish upper-bound token estimate: words + punctuation +
-    ~1 token per 4 chars of long words — the standard cheap proxy when
-    a real tokenizer is unavailable cluster-side."""
-    col = F.col(text) if isinstance(text, str) else text
-    words = tokens(col)
-    long_extra = F.aggregate(
-        words, F.lit(0),
-        lambda acc, w: acc + F.when(F.length(w) > 4,
-                                    (F.length(w) - 1) / 4).otherwise(0)
-        .cast("int"))
-    return F.size(words) + long_extra
-
-
 def stopword_hits(text: Column | str, words: list[str]) -> Column:
     """Count of tokens present in the given word list (language-ID /
     quality feature). array_intersect-free: per-token membership so

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from aether_firebase_consumer_spark.functions.text import shingles, tokens
+from aether_firebase_consumer_spark.materialize import materialize as _materialize
 
 
 # ---------------------------------------------------------------- exact
@@ -307,13 +308,9 @@ def lsh_probe_partitioned_pairs(long_index: DataFrame,
     sh_i, long_i, _ = _lsh_band_long(incoming, id_col, text_col,
                                      k, bands, shingle_k)
     # materialize once: the prefix collect AND the candidate join both
-    # read this frame. LAZY checkpoint (r15): eager=False defers the
-    # materialization into the prefix collect's own job, so the frame
-    # is computed, checkpointed and collected in ONE driver action
-    # instead of two (the probe path previously serialized 4 driver
-    # round-trips: ckpt, collect, ckpt, collect — now 2)
+    # read this frame
     if materialize:
-        long_i = long_i.localCheckpoint(eager=False)
+        long_i, _ = _materialize(long_i)
     prefixes = [r[0] for r in long_i
                 .select(band_partition(F.col("band_key"), n_parts)
                         .alias("p")).distinct().collect()]
@@ -331,10 +328,8 @@ def lsh_probe_partitioned_pairs(long_index: DataFrame,
                     F.col(f"b.{id_col}").alias("old_id"))
             .distinct())
     if materialize:
-        # reused: idp-prefix collect + both verify joins — lazy for the
-        # same one-action reason as long_i above (the idp collect
-        # triggers and persists it)
-        cand = cand.localCheckpoint(eager=False)
+        # reused: idp-prefix collect + both verify joins
+        cand, _ = _materialize(cand)
     di = doc_index
     if idp_parts is not None and "idp" in di.columns:
         idps = [r[0] for r in cand
@@ -443,25 +438,24 @@ def connected_components(edges: DataFrame, src: str = "src",
     GraphX/GraphFrames): each round every node adopts the minimum label
     among itself and its neighbors; converges in O(component diameter)
     rounds — near-dup graphs are shallow, so single digits. Each round
-    is one shuffle of (node, label) pairs; ``localCheckpoint`` truncates
+    is one shuffle of (node, label) pairs; materializing each round cuts
     the growing lineage so round N doesn't replay rounds 1..N-1. The
     driver sees only a per-round convergence *count*, never row data.
     """
-    # localCheckpoint the symmetric edge list: it feeds the seed AND
+    # materialize the symmetric edge list: it feeds the seed AND
     # every propagation round — without it the caller's (expensive,
     # LSH-derived) edge computation re-runs once per round, the same
     # re-derivation the sf1 probe caught in the graph queries
-    sym = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")) \
+    sym, _ = _materialize(
+        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .union(edges.select(F.col(dst).alias("e_src"),
-                            F.col(src).alias("e_dst"))) \
-        .localCheckpoint()
+                            F.col(src).alias("e_dst"))))
     # seed label = min(id, direct neighbors): one aggregation instead of
     # an identity round — saves a full propagate+checkpoint+count cycle
-    labels = (sym.groupBy(F.col("e_src").alias("id"))
-                 .agg(F.min("e_dst").alias("min_dst"))
-                 .select("id", F.least(F.col("id"), F.col("min_dst"))
-                         .alias("label"))
-                 .localCheckpoint())
+    labels, _ = _materialize(
+        sym.groupBy(F.col("e_src").alias("id"))
+        .agg(F.min("e_dst").alias("min_dst"))
+        .select("id", F.least("id", "min_dst").alias("label")))
     for _ in range(max_iter):
         neigh = (sym.join(labels, sym.e_src == labels.id)
                     .groupBy(F.col("e_dst").alias("n_id"))
@@ -472,7 +466,7 @@ def connected_components(edges: DataFrame, src: str = "src",
                                F.coalesce(F.col("n_min"), F.col("label")))
                        .alias("new_label"),
                        F.col("label").alias("old_label")))
-        new = new.localCheckpoint()
+        new, _ = _materialize(new)
         changed = new.filter(F.col("new_label") < F.col("old_label")).count()
         labels = new.select("id", F.col("new_label").alias("label"))
         if changed == 0:
@@ -525,17 +519,16 @@ def simhash_band_pairs(sigs: DataFrame, id_col: str = "doc_id",
     probabilistic. All joins are equi-joins on (band_id, band_val);
     the shuffle carries (id, signature), never the text.
     Returns distinct (id_a, id_b, sig_a, sig_b) with id_a < id_b."""
-    bands = sigs.select(
+    bands, _ = _materialize(sigs.select(
         F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig"),
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_id"),
                      F.shiftright(F.col(sig_col), band_bits * b)
                      .bitwiseAND(F.lit(2 ** band_bits - 1))
                      .alias("band_val"))
-            for b in range(n_bands)])).alias("bb")) \
-        .select("_id", "_sig", "bb.band_id", "bb.band_val") \
-        .localCheckpoint()
-    # localCheckpoint: both self-join sides read the materialized band
+            for b in range(n_bands)])).alias("bb"))
+        .select("_id", "_sig", "bb.band_id", "bb.band_val"))
+    # materialize: both self-join sides read the materialized band
     # frame — without it the caller's signature computation (e.g. 32
     # md5-nibble folds per doc for simhash) runs twice (measured
     # 13.3→10.3 s at the sf1 probe scale)
@@ -582,7 +575,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     #
     # HASHED KEYS (r15, guide §2.3 "shuffle fewer bytes / narrower
     # types"): every downstream operator — the DF-cap groupBy, the
-    # rare-set join, the localCheckpoint write, and the inverted-index
+    # rare-set join, the materialize write, and the inverted-index
     # self-join — keys on the shingle only to COUNT matches per id
     # pair; the string itself never reaches the output. Hashing each
     # shingle to int64 (xxhash64) right after the explode shrinks the
@@ -611,11 +604,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                .agg(F.count("*").alias("df_"))
                .filter(F.col("df_") > max_doc_freq)
                .select("shingle"))
-        # localCheckpoint: the capped index feeds sizes AND both join
+        # materialize: the capped index feeds sizes AND both join
         # sides — without it the DF-cap shuffle join re-derives 3x
         # (measured 1.2x at the sf1 probe scale, and the gap widens
         # with data since the recompute includes a growing shuffle)
-        inv = inv.join(hot, "shingle", "left_anti").localCheckpoint()
+        inv, _ = _materialize(inv.join(hot, "shingle", "left_anti"))
     sizes = inv.groupBy("id").agg(F.count("*").alias("n"))
     a, b = inv.alias("a"), inv.alias("b")
     common = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
@@ -661,7 +654,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
                .select("shingle"))
         # same 3-reference shape as ngram_jaccard_pairs: one
         # materialization of the capped index
-        inv = inv.join(hot, "shingle", "left_anti").localCheckpoint()
+        inv, _ = _materialize(inv.join(hot, "shingle", "left_anti"))
     sizes = inv.groupBy("id").agg(F.count("*").alias("n"))
     # HALVED self-join (r15, guide §2.3 "shuffle fewer bytes"):
     # |A∩B| is symmetric, so the undirected a.id < b.id join carries
@@ -784,6 +777,24 @@ def editdist_segments(k: int, length: int) -> list[tuple[int, int]]:
 _CAND_BROADCAST_CAP = 1_000_000
 
 
+def _verify_frame(cand: DataFrame, side_a: DataFrame, side_b: DataFrame,
+                  cap: int) -> DataFrame:
+    """``cand`` (id_a, id_b) with each member's text attached from
+    ``side_a`` (id_a, x_a) and ``side_b`` (id_b, x_b). Every join has
+    an explicit strategy, so no plan ever broadcasts text: below
+    ``cap`` materialized pairs, each side is looked up against a
+    broadcast of the bare id pairs and the two halves sort-merge on
+    the pair; above it, both lookups sort-merge by id."""
+    cand, n_cand = _materialize(cand)
+    if n_cand <= cap:
+        ids = F.broadcast(cand)
+        return (ids.join(side_a, "id_a").hint("merge")
+                .join(ids.join(side_b, "id_b").hint("merge"),
+                      ["id_a", "id_b"]))
+    return (cand.join(side_a.hint("merge"), "id_a")
+            .join(side_b.hint("merge"), "id_b"))
+
+
 def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
                    k: int = 2, prefix_len: int = 64,
                    cand_broadcast_cap: int = _CAND_BROADCAST_CAP,
@@ -852,19 +863,11 @@ def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
             .select(F.least("id_s", "id_p").alias("id_a"),
                     F.greatest("id_s", "id_p").alias("id_b"))
             .dropDuplicates(["id_a", "id_b"]))
-    # adaptive verify join — same §3.1 rationale and bounded-probe
-    # pattern as editdist_pairs_full: never let a static
-    # under-estimate broadcast the corpus prefixes; broadcast the
-    # (counted, materialized) candidate pairs while they fit, fall
-    # back to a sort-merge that shuffles each side once by id
+    # adaptive verify join — same §3.1 rationale as
+    # editdist_pairs_full: never broadcast the corpus prefixes
     pa = base.select(F.col("id").alias("id_a"), F.col("p").alias("p_a"))
     pb = base.select(F.col("id").alias("id_b"), F.col("p").alias("p_b"))
-    cand = cand.localCheckpoint(eager=False)
-    if cand.count() <= cand_broadcast_cap:
-        cand = F.broadcast(cand)
-    else:
-        pa, pb = pa.hint("merge"), pb.hint("merge")
-    return (cand.join(pa, "id_a").join(pb, "id_b")
+    return (_verify_frame(cand, pa, pb, cand_broadcast_cap)
             .withColumn("dist", F.levenshtein("p_a", "p_b"))
             .filter(F.col("dist") <= k)
             .select("id_a", "id_b", "dist"))
@@ -1031,20 +1034,12 @@ def editdist_pairs_full(df: DataFrame, id_col: str, text_col: str,
     # — but only usually: PassJoin does not bound candidate count on
     # adversarial corpora, so a hard F.broadcast(cand) would trade the
     # driver OOM for an executor one. Same resolution as the short
-    # bucket below: materialize cand (one lazy checkpoint whose write
-    # rides the counting job — the frame feeds both verify joins
-    # anyway), take its exact count, and broadcast below the cap /
-    # sort-merge above it (sf1 A/B, 5 345 candidates: broadcast-cand
-    # 0.81 s, merge 2.26 s, unhinted text broadcast 8.29 s; the merge
-    # path shuffles each side once by id and never collects).
+    # bucket below: :func:`_verify_frame` counts cand and broadcasts it
+    # only below the cap (sf1 A/B, 5 345 candidates: broadcast-cand
+    # 0.81 s, merge 2.26 s, text broadcast 8.29 s).
     ta = base.select(F.col("id").alias("id_a"), F.col("t").alias("t_a"))
     tb = base.select(F.col("id").alias("id_b"), F.col("t").alias("t_b"))
-    cand = cand.localCheckpoint(eager=False)
-    if cand.count() <= cand_broadcast_cap:
-        cand, ta, tb = F.broadcast(cand), ta, tb
-    else:
-        ta, tb = ta.hint("merge"), tb.hint("merge")
-    long_pairs = (cand.join(ta, "id_a").join(tb, "id_b")
+    long_pairs = (_verify_frame(cand, ta, tb, cand_broadcast_cap)
                   .withColumn("dist",
                               F.levenshtein("t_a", "t_b", k))  # banded
                   .filter(F.col("dist") >= 0)
@@ -1062,8 +1057,8 @@ def editdist_pairs_full(df: DataFrame, id_col: str, text_col: str,
     # driver action even for an empty bucket). When the bucket fits
     # the cap, the materialized probe IS the whole short side, so
     # the broadcast below re-reads it for free.
-    short_probe = short.limit(short_broadcast_cap + 1).localCheckpoint()
-    n_short = short_probe.count()
+    short_probe, n_short = _materialize(
+        short.limit(short_broadcast_cap + 1))
     if n_short == 0:
         return long_pairs
     partners = (df.filter(F.length(F.col(text_col)) <= 2 * k)

@@ -32,6 +32,7 @@ from aether_firebase_consumer_spark.functions.vectors import (
     ivf_centroids,
     memo_col,
 )
+from aether_firebase_consumer_spark.materialize import materialize
 from aether_firebase_consumer_spark.plans import REGISTRY, register
 from aether_firebase_consumer_spark.tables import fan_out_for_compute, load_table
 
@@ -308,7 +309,7 @@ def _register_pagerank() -> None:
         # ONCE; without it every edges reference in the 3-iteration
         # loop re-derives it (Spark has no common-subplan reuse),
         # which is what made the sf1 probe superlinear
-        nd = similarity_embedding_neardup(spark, sf_dir).localCheckpoint()
+        nd, _ = materialize(similarity_embedding_neardup(spark, sf_dir))
         edges = (nd.select(F.col("id_a").alias("src"),
                            F.col("id_b").alias("dst"))
                  .union(nd.select(F.col("id_b").alias("src"),
@@ -384,8 +385,8 @@ def _register_triangles() -> None:
         )
         # one materialization: e1/e2/e3/deg all read the checkpointed
         # pairs instead of re-deriving the near-dup computation 4x
-        nd = similarity_embedding_neardup(spark, sf_dir) \
-            .select("id_a", "id_b").localCheckpoint()
+        nd, _ = materialize(similarity_embedding_neardup(spark, sf_dir)
+                            .select("id_a", "id_b"))
         e1 = nd.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         e2 = nd.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
         e3 = nd.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))
@@ -499,18 +500,9 @@ def _semdedup_prune(a: DataFrame) -> DataFrame:
     # — 3 references, and only the self-join pair enjoys Spark's
     # exchange reuse, so without this the k-literal argmax (the
     # heaviest expression in the query) re-evaluates per reference
-    # (measured med 5.98 s -> 2.43 s at sf0.1/local[32]).
-    #
-    # localCheckpoint vs persist(MEMORY_AND_DISK), A/B'd r15 (VERDICT
-    # r14 #10, tools/ab_ckpt_vs_persist_r15.py): checkpoint wins at
-    # both decades (sf0.1 med 1.28 vs 1.49 s; sf1 8.87 vs 9.02 s), so
-    # it stays. CLUSTER-MODE CAVEAT: localCheckpoint truncates lineage
-    # into executor-local blocks — an executor loss mid-query is
-    # unrecoverable (the query fails and must rerun) and the frame
-    # occupies executor local storage at corpus scale. On a deployment
-    # where executor churn is expected, persist(MEMORY_AND_DISK) is
-    # the recoverable alternative at the measured ~5-15 % premium.
-    a = a.localCheckpoint()
+    # (measured med 5.98 s -> 2.43 s at sf0.1/local[32]). The policy
+    # A/B and its cluster-mode caveat: :mod:`~..materialize`.
+    a, _ = materialize(a)
     counts = a.groupBy("cluster").agg(F.count(F.lit(1)).alias("cnt"))
     a2 = (
         a.join(F.broadcast(counts), "cluster")   # k rows — broadcast
@@ -620,14 +612,13 @@ def dedup_semantic_semdedup_trained(spark: SparkSession,
     # #5): the update aggregation and the reassignment each need the
     # full (vec_id, embedding) corpus — previously two independent
     # parquet scans (the second re-paying the scan after the driver
-    # round-trip). The LAZY checkpoint materializes inside the update
-    # job itself (no extra driver action), and the reassignment below
-    # derives from the checkpointed blocks instead of re-scanning.
-    a0 = emb.select(
+    # round-trip). The update aggregation and the reassignment below
+    # both read the checkpointed blocks instead of re-scanning.
+    a0, _ = materialize(emb.select(
         "vec_id", "embedding",
         memo_col(("ivf_cell", "embedding", _mat_key(_KM_INIT)),
                  lambda: ivf_cell(F.col("embedding"), _KM_INIT))
-        .alias("c")).localCheckpoint(eager=False)
+        .alias("c")))
     upd = (a0.select("c", F.posexplode("embedding").alias("pos", "val"))
              .groupBy("c", "pos")
              .agg(F.round(F.avg(F.col("val").cast("double")), 6)

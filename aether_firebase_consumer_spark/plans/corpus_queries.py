@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from aether_firebase_consumer_spark.materialize import materialize
 from aether_firebase_consumer_spark.plans import register
 from aether_firebase_consumer_spark.tables import fan_out_for_compute, load_table
 
@@ -481,13 +482,13 @@ def _train_bpe(spark: SparkSession, sf_dir: str,
     if cached is not None:
         return cached
     docs = fan_out_for_compute(load_table(spark, sf_dir, "documents"))
-    words = (docs.select(F.explode(F.split("text", " ")).alias("w"))
-             .filter(F.col("w") != "")
-             .groupBy("w").agg(F.count("*").alias("wc"))
-             .select(F.concat(
-                 F.regexp_replace(F.col("w"), "(.)", "$1" + _SEP),
-                 F.lit("</w>")).alias("sym"), "wc")
-             .localCheckpoint())
+    words, _ = materialize(
+        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w").agg(F.count("*").alias("wc"))
+        .select(F.concat(
+            F.regexp_replace(F.col("w"), "(.)", "$1" + _SEP),
+            F.lit("</w>")).alias("sym"), "wc"))
     cur = words
     merges = []
     for r in range(n):
@@ -516,7 +517,7 @@ def _train_bpe(spark: SparkSession, sf_dir: str,
             F.replace(F.col("sym"), F.lit(pair),
                       F.lit(left + right)).alias("sym"), "wc")
         if (r + 1) % _BPE_CKPT_EVERY == 0:
-            cur = cur.localCheckpoint()
+            cur, _ = materialize(cur)
     _BPE_CACHE[(sf_dir, n)] = merges
     return merges
 

@@ -25,6 +25,7 @@ from aether_firebase_consumer_spark.operators.dedup import (
     simhash,
     simhash_band_pairs,
 )
+from aether_firebase_consumer_spark.materialize import materialize
 from aether_firebase_consumer_spark.plans import register
 from aether_firebase_consumer_spark.tables import fan_out_for_compute, load_table
 
@@ -414,9 +415,9 @@ def dedup_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ranked lineage (fingerprint hash + fp-shuffle + two windows)
     # feeds THREE branches (LSH/CC, the survivor join, the dropped
     # union); truncate it once so the corpus isn't re-scanned and
-    # re-hashed per branch — same localCheckpoint idiom as
+    # re-hashed per branch — same materialize idiom as
     # connected_components' iteration
-    ranked = ranked.localCheckpoint()
+    ranked, _ = materialize(ranked)
     survivors = ranked.filter(F.col("rn") == 1)
     pairs = lsh_candidate_pairs(survivors, "doc_id", "text",
                                 k=_K, bands=_BANDS) \

@@ -38,6 +38,7 @@ from aether_firebase_consumer_spark.functions.vectors import (
     pq_codes,
     pq_lut,
 )
+from aether_firebase_consumer_spark.materialize import materialize as _materialize
 from aether_firebase_consumer_spark.plans import register
 from aether_firebase_consumer_spark.tables import fan_out_for_compute, load_table
 
@@ -87,10 +88,6 @@ def _band_sql(alias: str, planes: list[list[float]]) -> str:
             f"CASE WHEN list_dot_product({alias}.embedding::DOUBLE[], "
             f"{arr}::DOUBLE[]) > 0 THEN {2 ** i} ELSE 0 END")
     return "(" + " + ".join(terms) + ")"
-
-
-def _bucket_sql(alias: str) -> str:
-    return _band_sql(alias, _PLANES)
 
 
 @register(
@@ -705,7 +702,7 @@ def embedding_probe_partitioned_pairs(long_index: DataFrame,
         F.posexplode(lsh_band_keys(F.col(vec_col), bands))
         .alias("bi", "bk"))
     if materialize:
-        long_i = long_i.localCheckpoint()
+        long_i, _ = _materialize(long_i)
     prefixes = [r[0] for r in long_i
                 .select(band_partition(F.col("bk"), n).alias("p"))
                 .distinct().collect()]
@@ -722,7 +719,7 @@ def embedding_probe_partitioned_pairs(long_index: DataFrame,
             .select("new_id", "old_id").distinct())
     if materialize:
         # reused: idp-prefix collect + both verify joins
-        cand = cand.localCheckpoint()
+        cand, _ = _materialize(cand)
     co = corpus
     if idp_parts is not None and "idp" in co.columns:
         idps = [r[0] for r in cand

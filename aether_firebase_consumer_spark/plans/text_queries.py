@@ -18,6 +18,7 @@ from aether_firebase_consumer_spark.functions.text import (
     rolling_hash,
     token_count,
 )
+from aether_firebase_consumer_spark.materialize import materialize
 from aether_firebase_consumer_spark.plans import register
 from aether_firebase_consumer_spark.tables import fan_out_for_compute, load_table
 
@@ -616,19 +617,9 @@ def centroid_classify(docs: DataFrame, id_col: str, label_col: str,
     # reference (the plan audit counted 28 shuffles; measured
     # 2.87 s -> 1.98 s at sf0.1/local[32]). Checkpointing further
     # downstream (sc, nl) measured slower: each extra eager action
-    # costs more than the reuse it buys.
-    #
-    # localCheckpoint vs persist(MEMORY_AND_DISK), A/B'd r15 (VERDICT
-    # r14 #10, tools/ab_ckpt_vs_persist_r15.py): checkpoint wins
-    # decisively at both decades (sf0.1 med 1.63 vs 3.59 s; sf1 2.31
-    # vs 4.79 s — the persisted InMemoryRelation blocks the pushdowns
-    # the downstream train/test filters rely on), so it stays.
-    # CLUSTER-MODE CAVEAT: localCheckpoint blocks are executor-local —
-    # an executor loss mid-query is unrecoverable (rerun the query),
-    # and at corpus scale the token-count frame sits on executor local
-    # storage; prefer persist(MEMORY_AND_DISK) where executor churn is
-    # routine, at the measured ~2x premium.
-    tc = tc.localCheckpoint()
+    # costs more than the reuse it buys. The policy A/B and its
+    # cluster-mode caveat: :mod:`~..materialize`.
+    tc, _ = materialize(tc)
     train = tc.filter(F.col("_train"))
     test = tc.filter(~F.col("_train"))
     prof = (train.groupBy(F.col("lang").alias("plang"), "tok")

@@ -27,7 +27,6 @@ is a drop-in upgrade of this class.
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import functools
 import json
@@ -40,6 +39,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from aether_firebase_consumer_spark.materialize import materialize, release_scope
 
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
@@ -109,20 +110,6 @@ def _key_join(left: DataFrame, keys_df: DataFrame, key_cols: list[str],
         e = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
         cond = e if cond is None else cond & e
     return l.join(r, cond, how)
-
-
-@contextlib.contextmanager
-def _evaluated_once(df: DataFrame):
-    """``df`` computed once and pinned for the block, then released.
-    A local checkpoint, not ``persist``: it runs under adaptive
-    execution, so joins and writes over it coalesce like an uncached
-    plan (a persisted key-deduplicated frame pins them to its key
-    partitioning: about three times the files)."""
-    pinned = df.localCheckpoint()
-    try:
-        yield pinned
-    finally:  # a checkpoint has no DataFrame-level release
-        pinned._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def _touched_filter(pc: str, touched: list) -> Column:
@@ -670,6 +657,7 @@ class ParquetUpsertTable:
                 .filter(untouched))
 
     # -- merge ----------------------------------------------------------
+    @release_scope()
     def merge(self, batch: DataFrame,
               commit_meta: "dict | Callable | None" = None) -> None:
         """Upsert ``batch`` by key: one row per key (dropDuplicates on
@@ -688,17 +676,17 @@ class ParquetUpsertTable:
         that lets foreachBatch sinks fence replayed epochs (see
         ``IncrementalRollup``).
 
-        The batch is evaluated ONCE (:func:`_evaluated_once`), so the
-        write, the change recording and every commit retry see the same
-        survivor per key, and the source behind it is read once."""
-        with _evaluated_once(batch.dropDuplicates(self.key_cols)) as batch1:
-            # an empty merge is a NO-OP whether or not the table exists:
-            # onto an existing table the rewrite would copy EVERYTHING
-            # for nothing, and onto a fresh table Spark would write a
-            # version with no parquet files at all (only _SUCCESS),
-            # bricking every later read with 'Unable to infer schema'
-            if batch1.count():
-                self._merge(batch1, commit_meta)
+        The batch is evaluated ONCE (``materialize``), so the write, the
+        change recording and every commit retry see the same survivor per
+        key, and the source behind it is read once."""
+        batch1, rows = materialize(batch.dropDuplicates(self.key_cols))
+        # an empty merge is a NO-OP whether or not the table exists:
+        # onto an existing table the rewrite would copy EVERYTHING
+        # for nothing, and onto a fresh table Spark would write a
+        # version with no parquet files at all (only _SUCCESS),
+        # bricking every later read with 'Unable to infer schema'
+        if rows:
+            self._merge(batch1, commit_meta)
 
     def _record_merge(self, staged: str, scope: DataFrame,
                       batch1: DataFrame) -> None:
@@ -801,6 +789,7 @@ class ParquetUpsertTable:
                     os.link(sf, df_)
 
     @_retrying
+    @release_scope()
     def replace(self, batch: DataFrame,
                 commit_meta: "dict | Callable | None" = None) -> None:
         """Atomic full-table REPLACE: write ``batch`` as the next
@@ -812,26 +801,26 @@ class ParquetUpsertTable:
         index's subcluster modulus) — a merge would be a full rewrite
         anyway, without replace's drop-absent-keys semantics."""
         # one evaluation: the write and the recording share survivors
-        with _evaluated_once(batch.dropDuplicates(self.key_cols)) as batch1:
-            if not batch1.count():
-                # an all-files-empty parquet version is unreadable
-                # ('Unable to infer schema'); an empty replace has no
-                # valid target state to write, so refuse loudly instead
-                # of bricking reads
-                raise ValueError(
-                    "replace() with an empty batch would write an "
-                    "unreadable version — use delete_keys() to empty a "
-                    "table")
-            parent = self.current_version()
-            target = self._stage_dir()
-            writer = batch1.write.mode("overwrite")
-            if self.partition_col:
-                writer = writer.partitionBy(self.partition_col)
-            writer.parquet(target)
-            # replace is O(table) by design (every row rewritten), so
-            # its recording is the full old-vs-new diff — same cost
-            self._record_changes(target, self._read_at(parent), batch1)
-            self._publish(target, parent, commit_meta)
+        batch1, rows = materialize(batch.dropDuplicates(self.key_cols))
+        if not rows:
+            # an all-files-empty parquet version is unreadable
+            # ('Unable to infer schema'); an empty replace has no
+            # valid target state to write, so refuse loudly instead
+            # of bricking reads
+            raise ValueError(
+                "replace() with an empty batch would write an "
+                "unreadable version — use delete_keys() to empty a "
+                "table")
+        parent = self.current_version()
+        target = self._stage_dir()
+        writer = batch1.write.mode("overwrite")
+        if self.partition_col:
+            writer = writer.partitionBy(self.partition_col)
+        writer.parquet(target)
+        # replace is O(table) by design (every row rewritten), so
+        # its recording is the full old-vs-new diff — same cost
+        self._record_changes(target, self._read_at(parent), batch1)
+        self._publish(target, parent, commit_meta)
 
     @_retrying
     def delete_keys(self, keys: DataFrame,

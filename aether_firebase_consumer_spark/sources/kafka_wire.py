@@ -1516,8 +1516,9 @@ class MiniKafkaBroker:
 
         self._server = Server((host, port), Handler)
         self.host, self.port = self._server.server_address
+        # shutdown() waits out one poll: keep stop() prompt
         self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True)
+            target=self._server.serve_forever, args=(0.05,), daemon=True)
 
     # -- lifecycle --------------------------------------------------------
     def start(self) -> "MiniKafkaBroker":

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aether_firebase_consumer_spark.materialize import materialize as _materialize
+from aether_firebase_consumer_spark.materialize import release_scope
 from aether_firebase_consumer_spark.operators.dedup import id_partition
 from aether_firebase_consumer_spark.plans.similarity_queries import (
     ivfadc_code_rows,
@@ -114,9 +116,9 @@ class AnnIndexJob(CdcIngest):
                                 self.id_col, self.vec_col,
                                 n_parts=self.n_parts)
 
+    @release_scope()
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.dropDuplicates([self.id_col]).localCheckpoint()
-        n = batch.count()
+        batch, n = _materialize(batch.dropDuplicates([self.id_col]))
         self.stats["batches"] += 1
         self.stats["indexed"] += n
         if n == 0:
@@ -130,6 +132,7 @@ class AnnIndexJob(CdcIngest):
                 .foreachBatch(self.process_batch)
                 .option("checkpointLocation", checkpoint))
 
+    @release_scope()
     def delete(self, ids) -> int:
         """Delete vectors by id from BOTH persisted tables (round 10,
         VERDICT r9 item 1) — the takedown/retention dual of the MERGE
@@ -152,8 +155,7 @@ class AnnIndexJob(CdcIngest):
         if doomed is None:
             return 0
         # referenced three times: count, codes keys, corpus keys
-        doomed = doomed.localCheckpoint()
-        n = doomed.count()
+        doomed, n = _materialize(doomed)
         if n == 0:
             return 0
         self.codes.delete_keys(
@@ -162,6 +164,7 @@ class AnnIndexJob(CdcIngest):
         self.stats["deleted"] += n
         return n
 
+    @release_scope()
     def reconcile(self) -> dict:
         """Repair corpus/codes divergence after a crash between the
         two MERGEs (ingest) or the two deletes (round 10) — the
@@ -188,17 +191,15 @@ class AnnIndexJob(CdcIngest):
             return out
         missing = corpus if codes is None else corpus.join(
             codes.select(self.id_col), self.id_col, "left_anti")
-        missing = missing.localCheckpoint()
-        n_miss = missing.count()
+        missing, n_miss = _materialize(missing)
         if n_miss:
             self.codes.merge(self.code_rows(missing))
             out["re_encoded"] = n_miss
         if codes is not None:
-            orphans = (codes.select(self.id_col, "cp")
-                       .join(corpus.select(self.id_col),
-                             self.id_col, "left_anti")
-                       .localCheckpoint())
-            n_orp = orphans.count()
+            orphans, n_orp = _materialize(
+                codes.select(self.id_col, "cp")
+                .join(corpus.select(self.id_col), self.id_col,
+                      "left_anti"))
             if n_orp:
                 self.codes.delete_keys(orphans)
                 out["orphans_dropped"] = n_orp
@@ -258,7 +259,7 @@ class AnnIndexJob(CdcIngest):
                                self.id_col, self.vec_col)
         if materialize:
             # referenced twice: the cp collect and the shortlist join
-            q = q.localCheckpoint()
+            q, _ = _materialize(q)
         cps = [r[0] for r in
                q.select(F.pmod(F.col("cell"), F.lit(self.n_parts))
                         .cast("int").alias("p")).distinct().collect()]
@@ -269,7 +270,7 @@ class AnnIndexJob(CdcIngest):
                               id_col=self.id_col)
         if materialize:
             # referenced twice: the idp collect and the re-rank join
-            sl = sl.localCheckpoint()
+            sl, _ = _materialize(sl)
         idps = [r[0] for r in
                 sl.select(id_partition(F.col("neighbor_id"),
                                        self.idp_parts).alias("p"))

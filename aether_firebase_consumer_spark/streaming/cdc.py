@@ -34,7 +34,7 @@ unchanged from the plain writer.
 
 Scale shape: the collapse is one window over the micro-batch (size ∝
 batch, never corpus); the split is two filters over one
-localCheckpoint; deletes and merges are the jobs' existing
+``materialize`` pin; deletes and merges are the jobs' existing
 partition-pruned paths. Nothing here scans the corpus beyond what
 :meth:`delete` already prunes to.
 """
@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aether_firebase_consumer_spark.materialize import materialize, release_scope
 from aether_firebase_consumer_spark.sinks.upsert import latest_per_key
 
 
@@ -64,6 +65,7 @@ class CdcIngest:
                 "CdcIngest host must define vec_col or text_col")
         return col
 
+    @release_scope()
     def process_cdc_batch(self, batch: DataFrame, epoch_id: int,
                           order_col: str | list[str] | None = None,
                           ) -> dict:
@@ -81,12 +83,12 @@ class CdcIngest:
             # caller promises ≤1 record per id (e.g. upstream compacted)
             batch = batch.dropDuplicates([self.id_col])
         # referenced twice (split) + counted: pin the collapse once
-        batch = batch.localCheckpoint()
+        batch, n = materialize(batch)
         dead = batch.where(F.col(pc).isNull()).select(self.id_col)
         live = batch.where(F.col(pc).isNotNull())
         n_dead = dead.count()
         deleted = self.delete(dead) if n_dead else 0
-        n_live = live.count()
+        n_live = n - n_dead
         if n_live:
             self.process_batch(live, epoch_id)
         return {"tombstones": n_dead, "deleted": deleted,

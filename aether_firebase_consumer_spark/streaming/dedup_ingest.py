@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from aether_firebase_consumer_spark.materialize import materialize, release_scope
 from aether_firebase_consumer_spark.operators.dedup import (
     BAND_INDEX_PARTITIONS,
     band_partition,
@@ -205,7 +206,7 @@ class DedupIngestJob(CdcIngest):
         I/O under churn). Old keys come from the PRE-merge per-doc
         index, so both the delete and the merge are pruned to the
         batch's partitions."""
-        new_rows = self._explode_long(doc_rows).localCheckpoint()
+        new_rows, _ = materialize(self._explode_long(doc_rows))
         if prev_doc_index is not None:
             old_long = (prev_doc_index
                         .join(doc_rows.select(self.id_col),
@@ -221,16 +222,17 @@ class DedupIngestJob(CdcIngest):
             self.band_long_index.delete_keys(stale)
         self.band_long_index.merge(new_rows)
 
+    @release_scope()
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         batch = batch.dropDuplicates([self.id_col])
         # in-batch near-dups: id_a < id_b by construction → dropping
         # every id_b keeps the smallest id of each near-dup group.
-        # localCheckpoint: the candidate join runs ONCE — the result
+        # materialize: the candidate join runs ONCE — the result
         # feeds the audit log, the loser anti-join, and (via survivors)
         # the counters and merge, all from the materialized frame.
-        in_pairs = lsh_candidate_pairs(batch, self.id_col, self.text_col,
-                                       k=self.k, bands=self.bands) \
-            .filter(F.col("jaccard") >= self.threshold).localCheckpoint()
+        in_pairs, _ = materialize(lsh_candidate_pairs(
+            batch, self.id_col, self.text_col, k=self.k, bands=self.bands)
+            .filter(F.col("jaccard") >= self.threshold))
         self._log_rejects(in_pairs, "id_b", "id_a", epoch_id)
         losers = in_pairs.select(F.col("id_b").alias(self.id_col)).distinct()
         survivors = batch.join(losers, self.id_col, "left_anti")
@@ -267,7 +269,7 @@ class DedupIngestJob(CdcIngest):
                 matches = lsh_incremental_pairs(
                     existing, fresh, self.id_col, self.text_col,
                     k=self.k, bands=self.bands, threshold=self.threshold)
-            matches = matches.localCheckpoint()
+            matches, _ = materialize(matches)
             self._log_rejects(matches, "new_id", "old_id", epoch_id)
             dup_ids = matches.select(
                 F.col("new_id").alias(self.id_col)).distinct()
@@ -280,9 +282,8 @@ class DedupIngestJob(CdcIngest):
         # one materialization of the survivor plan: counters and the
         # corpus/index merges all read the checkpointed result instead
         # of re-running the LSH joins (3× in the pre-r6 shape)
-        survivors = survivors.localCheckpoint()
+        survivors, n_kept = materialize(survivors)
         n_in = batch.count()
-        n_kept = survivors.count()
         self.stats["batches"] += 1
         self.stats["accepted"] += n_kept
         self.stats["rejected"] += n_in - n_kept
@@ -296,7 +297,7 @@ class DedupIngestJob(CdcIngest):
             if self.band_long_index is not None:
                 # ONE shingle pass feeds both index tables: the long
                 # rows below are an explode of these materialized rows
-                doc_rows = doc_rows.localCheckpoint()
+                doc_rows, _ = materialize(doc_rows)
             self.band_index.merge(doc_rows)
             if self.band_long_index is not None:
                 if had_long:
@@ -308,6 +309,7 @@ class DedupIngestJob(CdcIngest):
                     self.band_long_index.merge(
                         self._explode_long(self.band_index.read()))
 
+    @release_scope()
     def delete(self, ids) -> int:
         """Delete documents by id from the corpus and every persisted
         index table (round 10, VERDICT r9 item 1) — the takedown dual
@@ -330,10 +332,9 @@ class DedupIngestJob(CdcIngest):
             return 0
         # prune the membership check to the ids' own partitions (same
         # rule as known_ids: a doc can only live at its id's idp)
-        doomed_ids = known_ids(self.corpus, existing, ids1,
-                               self.id_col, self.idp_parts) \
-            .join(ids1, self.id_col, "left_semi").localCheckpoint()
-        n = doomed_ids.count()
+        doomed_ids, n = materialize(
+            known_ids(self.corpus, existing, ids1, self.id_col,
+                      self.idp_parts).join(ids1, self.id_col, "left_semi"))
         if n == 0:
             return 0
         if self.band_index is not None:
@@ -379,6 +380,7 @@ class DedupIngestJob(CdcIngest):
                 "idp", id_partition(F.col(self.id_col), self.idp_parts))
         return keys
 
+    @release_scope()
     def reconcile(self) -> dict:
         """Repair corpus/band-index divergence after a crash between
         the family's table writes (round 10 — the band twin of
@@ -420,20 +422,18 @@ class DedupIngestJob(CdcIngest):
             return out
         missing = corpus if doc_idx is None else corpus.join(
             doc_idx.select(self.id_col), self.id_col, "left_anti")
-        missing = missing.localCheckpoint()
-        n_miss = missing.count()
+        missing, n_miss = materialize(missing)
         if n_miss:
-            rows = self._index_rows(missing).localCheckpoint()
+            rows, _ = materialize(self._index_rows(missing))
             self.band_index.merge(rows)
             if self.band_long_index is not None:
                 self.band_long_index.merge(self._explode_long(rows))
                 has_long = True
             out["re_indexed"] = n_miss
         if doc_idx is not None:
-            orphans = (doc_idx.join(corpus.select(self.id_col),
-                                    self.id_col, "left_anti")
-                       .localCheckpoint())
-            n_orp = orphans.count()
+            orphans, n_orp = materialize(
+                doc_idx.join(corpus.select(self.id_col), self.id_col,
+                             "left_anti"))
             if n_orp:
                 if has_long:
                     self.band_long_index.delete_keys(
@@ -446,7 +446,7 @@ class DedupIngestJob(CdcIngest):
             doc_now = self.band_index.read()
             long_now = self.band_long_index.read()
             want = None if doc_now is None else \
-                self._explode_long(doc_now).localCheckpoint()
+                materialize(self._explode_long(doc_now))[0]
             keys = [self.id_col, "band_key"]
             if want is None:
                 if long_now is not None:
@@ -459,14 +459,12 @@ class DedupIngestJob(CdcIngest):
             else:
                 miss_l = want if long_now is None else want.join(
                     long_now.select(*keys), keys, "left_anti")
-                miss_l = miss_l.localCheckpoint()
-                n_ml = miss_l.count()
+                miss_l, n_ml = materialize(miss_l)
                 if n_ml:
                     self.band_long_index.merge(miss_l)
-                stale_l = None if long_now is None else (
-                    long_now.join(want.select(*keys), keys,
-                                  "left_anti").localCheckpoint())
-                n_sl = 0 if stale_l is None else stale_l.count()
+                stale_l, n_sl = (None, 0) if long_now is None else \
+                    materialize(long_now.join(want.select(*keys), keys,
+                                              "left_anti"))
                 if n_sl:
                     self.band_long_index.delete_keys(
                         stale_l.select(self.id_col, "band_key", "bkp"))

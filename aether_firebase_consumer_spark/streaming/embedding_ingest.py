@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from aether_firebase_consumer_spark.materialize import materialize, release_scope
 from aether_firebase_consumer_spark.operators.dedup import (
     BAND_INDEX_PARTITIONS,
     id_partition,
@@ -109,6 +110,7 @@ class EmbeddingIngestJob(CdcIngest):
         self.stats = {"batches": 0, "accepted": 0, "rejected": 0,
                       "deleted": 0}
 
+    @release_scope()
     def delete(self, ids) -> int:
         """Delete vectors by id from the corpus and every persisted
         index table (round 10, VERDICT r9 item 1). ``ids`` is a
@@ -127,8 +129,7 @@ class EmbeddingIngestJob(CdcIngest):
                              self.idp_parts)
         if doomed is None:
             return 0
-        doomed = doomed.localCheckpoint()
-        n = doomed.count()
+        doomed, n = materialize(doomed)
         if n == 0:
             return 0
         if self.band_long_index is not None \
@@ -145,6 +146,7 @@ class EmbeddingIngestJob(CdcIngest):
         self.stats["deleted"] += n
         return n
 
+    @release_scope()
     def reconcile(self) -> dict:
         """Repair corpus/band-index divergence after a crash between
         the family's table writes (round 10 — the sign-LSH twin of
@@ -168,16 +170,14 @@ class EmbeddingIngestJob(CdcIngest):
             if want is not None:
                 miss = want if idx is None else want.join(
                     idx.select(self.id_col), self.id_col, "left_anti")
-                miss = miss.localCheckpoint()
-                n_miss = miss.count()
+                miss, n_miss = materialize(miss)
                 if n_miss:
                     self.band_index.merge(miss)
             if idx is not None:
                 orp = idx if corpus is None else idx.join(
                     corpus.select(self.id_col), self.id_col,
                     "left_anti")
-                orp = orp.localCheckpoint()
-                n_orp = orp.count()
+                orp, n_orp = materialize(orp)
                 if n_orp:
                     self.band_index.delete_keys(
                         orp.select(self.id_col))
@@ -185,24 +185,22 @@ class EmbeddingIngestJob(CdcIngest):
             out["orphans_dropped"] += n_orp
         if self.band_long_index is not None:
             longi = self.band_long_index.read()
-            want = None if corpus is None else \
+            want = None if corpus is None else materialize(
                 embedding_band_index_rows(
                     corpus, self.id_col, self.vec_col, self.bands,
-                    self.n_parts).localCheckpoint()
+                    self.n_parts))[0]
             keys = [self.id_col, "bi"]
             n_miss = n_orp = 0
             if want is not None:
                 miss = want if longi is None else want.join(
                     longi.select(*keys), keys, "left_anti")
-                miss = miss.localCheckpoint()
-                n_miss = miss.count()
+                miss, n_miss = materialize(miss)
                 if n_miss:
                     self.band_long_index.merge(miss)
             if longi is not None:
                 orp = longi if want is None else longi.join(
                     want.select(*keys), keys, "left_anti")
-                orp = orp.localCheckpoint()
-                n_orp = orp.count()
+                orp, n_orp = materialize(orp)
                 if n_orp:
                     self.band_long_index.delete_keys(
                         orp.select(self.id_col, "bi", "bkp"))
@@ -289,13 +287,13 @@ class EmbeddingIngestJob(CdcIngest):
             existing, fresh, self.id_col, self.vec_col,
             self.bands, self.threshold)
 
+    @release_scope()
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         batch = batch.dropDuplicates([self.id_col])
         # in-batch near-dups: id_a < id_b by construction → dropping
         # every id_b keeps the smallest id per near-dup group
-        in_pairs = embedding_neardup_pairs(
-            batch, self.id_col, self.vec_col, self.bands,
-            self.threshold).localCheckpoint()
+        in_pairs, _ = materialize(embedding_neardup_pairs(
+            batch, self.id_col, self.vec_col, self.bands, self.threshold))
         self._log_rejects(in_pairs, "id_b", "id_a", epoch_id)
         losers = in_pairs.select(F.col("id_b").alias(self.id_col)) \
             .distinct()
@@ -324,7 +322,7 @@ class EmbeddingIngestJob(CdcIngest):
                     self.bands, self.threshold)
             else:
                 matches = self._recompute_pairs(existing, fresh)
-            matches = matches.localCheckpoint()
+            matches, _ = materialize(matches)
             self._log_rejects(matches, "new_id", "old_id", epoch_id)
             dup_ids = matches.select(
                 F.col("new_id").alias(self.id_col)).distinct()
@@ -332,9 +330,8 @@ class EmbeddingIngestJob(CdcIngest):
             updates = survivors.join(known, self.id_col, "left_semi")
             survivors = updates.unionByName(accepted_fresh)
         # one materialization: counters + all merges read this result
-        survivors = survivors.localCheckpoint()
+        survivors, n_kept = materialize(survivors)
         n_in = batch.count()
-        n_kept = survivors.count()
         self.stats["batches"] += 1
         self.stats["accepted"] += n_kept
         self.stats["rejected"] += n_in - n_kept

@@ -48,6 +48,8 @@ from aether_firebase_consumer_spark.functions.vectors import (
     cosine,
     ivf_cell,
 )
+from aether_firebase_consumer_spark.materialize import materialize as _materialize
+from aether_firebase_consumer_spark.materialize import release_scope
 from aether_firebase_consumer_spark.operators.dedup import (
     id_partition,
     portable_hash60,
@@ -212,7 +214,7 @@ class SemanticIngestJob(CdcIngest):
         if "idp" in existing.columns:
             if materialize:
                 # referenced twice below (idp collect + verify join)
-                cand = cand.localCheckpoint()
+                cand, _ = _materialize(cand)
             idps = [r[0] for r in cand
                     .select(id_partition(F.col("old_id"),
                                          self.idp_parts).alias("p"))
@@ -234,10 +236,11 @@ class SemanticIngestJob(CdcIngest):
 
     # -- the batch handler ----------------------------------------------
 
+    @release_scope()
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         batch = batch.dropDuplicates([self.id_col])
         assigned = self._assign(batch)
-        in_pairs = self._in_batch_pairs(assigned).localCheckpoint()
+        in_pairs, _ = _materialize(self._in_batch_pairs(assigned))
         self._log_rejects(in_pairs, "id_b", "id_a", epoch_id)
         losers = in_pairs.select(F.col("id_b").alias(self.id_col)) \
             .distinct()
@@ -259,8 +262,8 @@ class SemanticIngestJob(CdcIngest):
                 # assignment — recompute it for this batch (identical
                 # arithmetic, test-pinned equivalence)
                 index = self.index_rows(existing)
-            matches = self._probe_pairs(
-                index, existing, self._assign(fresh)).localCheckpoint()
+            matches, _ = _materialize(self._probe_pairs(
+                index, existing, self._assign(fresh)))
             self._log_rejects(matches, "new_id", "old_id", epoch_id)
             dup_ids = matches.select(
                 F.col("new_id").alias(self.id_col)).distinct()
@@ -271,9 +274,8 @@ class SemanticIngestJob(CdcIngest):
         if self._corpus_pruned:
             survivors = self._with_idp(survivors)
         # one materialization: counters + all merges read this result
-        survivors = survivors.localCheckpoint()
+        survivors, n_kept = _materialize(survivors)
         n_in = batch.count()
-        n_kept = survivors.count()
         self.stats["batches"] += 1
         self.stats["accepted"] += n_kept
         self.stats["rejected"] += n_in - n_kept
@@ -287,6 +289,7 @@ class SemanticIngestJob(CdcIngest):
 
     # -- maintenance ------------------------------------------------------
 
+    @release_scope()
     def delete(self, ids) -> int:
         """Delete vectors by id from the corpus AND the persisted cell
         index (round 10, VERDICT r9 item 1): a removed vector must
@@ -307,8 +310,7 @@ class SemanticIngestJob(CdcIngest):
                              self.idp_parts)
         if doomed is None:
             return 0
-        doomed = doomed.localCheckpoint()
-        n = doomed.count()
+        doomed, n = _materialize(doomed)
         if n == 0:
             return 0
         if self.cluster_index is not None \
@@ -320,6 +322,7 @@ class SemanticIngestJob(CdcIngest):
         self.stats["deleted"] += n
         return n
 
+    @release_scope()
     def reconcile(self) -> dict:
         """Repair corpus/cluster-index divergence after a crash
         between the two MERGEs or the two deletes (round 10 — the
@@ -345,17 +348,15 @@ class SemanticIngestJob(CdcIngest):
             return out
         missing = corpus if index is None else corpus.join(
             index.select(self.id_col), self.id_col, "left_anti")
-        missing = missing.localCheckpoint()
-        n_miss = missing.count()
+        missing, n_miss = _materialize(missing)
         if n_miss:
             self.cluster_index.merge(self.index_rows(missing))
             out["re_assigned"] = n_miss
         if index is not None:
-            orphans = (index.select(self.id_col, "cp")
-                       .join(corpus.select(self.id_col),
-                             self.id_col, "left_anti")
-                       .localCheckpoint())
-            n_orp = orphans.count()
+            orphans, n_orp = _materialize(
+                index.select(self.id_col, "cp")
+                .join(corpus.select(self.id_col), self.id_col,
+                      "left_anti"))
             if n_orp:
                 self.cluster_index.delete_keys(orphans)
                 out["orphans_dropped"] = n_orp

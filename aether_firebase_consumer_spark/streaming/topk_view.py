@@ -92,6 +92,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from aether_firebase_consumer_spark.materialize import materialize, release_scope
 from aether_firebase_consumer_spark.sinks.upsert import (
     ParquetUpsertTable,
     latest_per_key,
@@ -181,10 +182,6 @@ class CdfTopKView:
              .orderBy(*self._order_exprs()))
         return rows.withColumn("_rk", F.row_number().over(w))
 
-    def _topn(self, rows: DataFrame) -> DataFrame:
-        return (self._ranked(rows)
-                .filter(F.col("_rk") <= self.n).drop("_rk"))
-
     # -- fold helpers ------------------------------------------------------
     def _null_safe_on(self, a: str, b: str, cols: list[str]):
         cond = None
@@ -251,11 +248,11 @@ class CdfTopKView:
         return self._applied(self.buffer) == self._applied()
 
     # -- fold --------------------------------------------------------------
+    @release_scope()
     def _fold(self, feed: DataFrame, up_to: int) -> None:
         meta = {"cdf_cursor": up_to}
         final = latest_per_key(feed, self.source.key_cols, "version")
-        changed_keys = final.select(*self.source.key_cols) \
-            .localCheckpoint()
+        changed_keys, _ = materialize(final.select(*self.source.key_cols))
         retract_g = self._retract_groups(feed)
         post_cols = [c for c in final.columns
                      if c not in ("change_type", "version")
@@ -274,14 +271,14 @@ class CdfTopKView:
         touched = retract_g if not live_ok else \
             retract_g.unionByName(
                 live.select(*self.group_cols)).distinct()
-        if touched.isEmpty():
+        touched, n_touched = materialize(touched)
+        if not n_touched:
             # nothing this view can observe changed (e.g. a slice
             # whose post-images lack the view's columns entirely and
             # retracts nothing). The fence rides the next
             # value-carrying fold — folds are idempotent per slice
             # and progress lives in the follower cursor.
             return
-        touched = touched.localCheckpoint()
 
         # -- view-state union (serving + usable bench), prefix rows --
         tbl = self.table.read()
@@ -306,15 +303,13 @@ class CdfTopKView:
                 .dropDuplicates(self.source.key_cols)
         if union is not None:
             union = self._semi_groups(union, touched)
-            survivors = self._anti_keys(union, changed_keys) \
-                .localCheckpoint()
+            survivors, _ = materialize(self._anti_keys(union, changed_keys))
         else:
             survivors = None
 
         # -- dirty decision: retracting groups whose surviving prefix
         #    no longer covers the top n --------------------------------
-        retract_g = retract_g.localCheckpoint()
-        n_retract = retract_g.count()
+        retract_g, n_retract = materialize(retract_g)
         self.stats["retract_groups"] += n_retract
         if n_retract == 0:
             dirty = None
@@ -332,8 +327,7 @@ class CdfTopKView:
                                for g in self.group_cols]))
         n_dirty = 0
         if dirty is not None:
-            dirty = dirty.localCheckpoint()
-            n_dirty = dirty.count()
+            dirty, n_dirty = materialize(dirty)
             self.stats["dirty_groups"] += n_dirty
         have_dirty = n_dirty > 0
 
@@ -365,7 +359,7 @@ class CdfTopKView:
             # A group with NO survivors here is a genuinely NEW group
             # (a nonempty source group always keeps >= 1 union row),
             # so its inserts are the whole group: fully trusted.
-            ranked_c = self._ranked(cand).localCheckpoint()
+            ranked_c, _ = materialize(self._ranked(cand))
             pmax = (ranked_c.filter(F.col("_sv") == 1)
                     .groupBy(*self.group_cols)
                     .agg(F.max("_rk").alias("_pmax")))
@@ -394,8 +388,8 @@ class CdfTopKView:
                     "source, or rebuild() the view") from exc
             # the pinned-source recompute is authoritative: its ranks
             # are true ranks, so the bench takes the full n+1..n+m
-            ranked_d = self._ranked(self._semi_groups(src, dirty)) \
-                .localCheckpoint()
+            ranked_d, _ = materialize(
+                self._ranked(self._semi_groups(src, dirty)))
             tbl_d = ranked_d.filter(F.col("_rk") <= self.n).drop("_rk")
             new_tbl = tbl_d if new_tbl is None else \
                 new_tbl.unionByName(tbl_d, allowMissingColumns=True)
@@ -407,9 +401,9 @@ class CdfTopKView:
                     new_buf.unionByName(buf_d, allowMissingColumns=True)
         if new_tbl is None:
             return
-        new_tbl = new_tbl.localCheckpoint()
+        new_tbl, n_new = materialize(new_tbl)
         if new_buf is not None:
-            new_buf = new_buf.localCheckpoint()
+            new_buf, n_buf = materialize(new_buf)
 
         # -- serving-table writes: merge THEN delete, fence on the
         #    LAST op — a mid-fold crash leaves a replayable SUPERSET
@@ -422,8 +416,7 @@ class CdfTopKView:
                 .select(*self.source.key_cols)
             if del_tbl.isEmpty():
                 del_tbl = None
-        have_new = not new_tbl.isEmpty()
-        if have_new:
+        if n_new:
             self.table.merge(new_tbl,
                              commit_meta=None if del_tbl is not None
                              else meta)
@@ -445,7 +438,7 @@ class CdfTopKView:
                 .select(*self.source.key_cols)
             if del_buf.isEmpty():
                 del_buf = None
-        if not new_buf.isEmpty():
+        if n_buf:
             self.buffer.merge(new_buf,
                               commit_meta=None if del_buf is not None
                               else buf_meta)
@@ -503,6 +496,7 @@ class CdfTopKView:
         self._fold(batch_df.filter(F.col("version") > applied),
                    int(up_to))
 
+    @release_scope()
     def rebuild(self) -> int:
         """Recovery past the retention window: full recompute at the
         source's current version, replacing the view atomically with
@@ -513,7 +507,7 @@ class CdfTopKView:
         if src is None or v < 0:
             raise ValueError("cannot rebuild a top-k view over an "
                              "empty source table")
-        ranked = self._ranked(src).localCheckpoint()
+        ranked, _ = materialize(self._ranked(src))
         self.table.replace(
             ranked.filter(F.col("_rk") <= self.n).drop("_rk"),
             commit_meta={"cdf_cursor": v})

@@ -270,6 +270,32 @@ def test_process_batch_single_materialization_job_count(spark, tmp_path):
     assert 0 < n_jobs <= 130, f"batch ran {n_jobs} Spark jobs"
 
 
+def test_soak_holds_no_pins_between_triggers(spark, tmp_path):
+    """A long-lived job holds bounded executor blocks: over 50 triggers
+    (a delete every 10th), every call leaves the persisted-RDD count
+    where it was before the first trigger — each call's pins are
+    released when it returns."""
+    corpus = ParquetUpsertTable(spark, str(tmp_path / "c"), ["doc_id"])
+    idx = ParquetUpsertTable(spark, str(tmp_path / "i"), ["doc_id"])
+    job = DedupIngestJob(spark, corpus, band_index=idx)
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    for t in range(50):
+        # three fresh docs and a near-dup of one the deletes spare
+        docs = [(10 * t + j, _mk_doc(10 * t + j)) for j in range(3)]
+        if t:
+            docs.append((10 * t + 9, _mk_doc(10 * t - 8) + " tail"))
+        job.process_batch(
+            spark.createDataFrame(docs, "doc_id bigint, text string"), t)
+        assert jsc.getPersistentRDDs().size() == base, f"trigger {t}"
+        if t % 10 == 9:
+            assert job.delete([10 * t, 10 * t + 1]) == 2
+            assert jsc.getPersistentRDDs().size() == base, f"delete {t}"
+    assert job.stats["batches"] == 50
+    assert job.stats["rejected"] == 49
+    assert corpus.read().count() == 150 - 10
+
+
 def test_index_probe_plan_never_touches_corpus_text(spark, tmp_path):
     """The 100 TB claim in executable form: with a band_index, the
     cross-batch matching plan scans the INDEX table only — the corpus

@@ -281,3 +281,51 @@ def test_verify_join_strategies_agree(spark):
         (r.id_a, r.id_b, r.dist) for r in editdist_pairs(
             df, "doc_id", "text", k=2, prefix_len=8).collect())
     assert got_p == want_p
+
+
+def _broadcast_outputs(df) -> list[set]:
+    """Output column names of every BroadcastExchange in ``df``'s final
+    adaptive plan (call after an action), descending through query
+    stages and reused exchanges."""
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if cls == "ReusedExchangeExec":
+            stack.append(node.child())
+            continue
+        if cls == "BroadcastExchangeExec":
+            out = node.output()
+            found.append({out.apply(i).name() for i in range(out.size())})
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_verify_joins_never_broadcast_text(spark):
+    """Both verify joins carry an explicit strategy on both branches:
+    below the cap only the candidate id pairs broadcast, above it both
+    joins sort-merge. No final adaptive plan may broadcast a subtree
+    that outputs a prefix or text column, whatever the runtime sizes
+    (at this scale AQE would otherwise broadcast the tiny text side)."""
+    rng = random.Random(7)
+    texts = ["".join(rng.choice("ab") for _ in range(12))
+             for _ in range(60)]
+    texts += [texts[0][:-1], texts[1] + "a", texts[2]]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    text_cols = {"p_a", "p_b", "t_a", "t_b"}
+    for cap in ({}, {"cand_broadcast_cap": 0}):
+        for out in (editdist_pairs(df, "doc_id", "text", k=2,
+                                   prefix_len=8, **cap),
+                    editdist_pairs_full(df, "doc_id", "text", k=2, **cap)):
+            assert out.collect()
+            bad = [cols for cols in _broadcast_outputs(out)
+                   if cols & text_cols]
+            assert not bad, f"text broadcast at {cap or 'default cap'}: {bad}"

@@ -157,6 +157,18 @@ def test_broker_produce_fetch_offsets(broker):
         assert c.metadata() == {"t.a": [0]}
 
 
+def test_broker_stop_is_prompt():
+    """stop() must not wait out a long serve_forever poll: each of the
+    ~33 broker fixtures in the suite pays it at teardown."""
+    for _ in range(3):
+        b = MiniKafkaBroker().start()
+        with _client(b) as c:
+            c.produce_records("t.stop", 0, [(None, b"v")])
+        t0 = time.monotonic()
+        b.stop()
+        assert time.monotonic() - t0 < 0.25
+
+
 def test_broker_fetch_respects_max_bytes_progressively(broker):
     with _client(broker) as c:
         c.produce_records("t.b", 0, [(None, f"value-{i}".encode())
